@@ -916,13 +916,15 @@ def main() -> None:
         healthy_prior = [
             r
             for r in prior
-            if r.get("queries_jobs_adj")
+            if r.get("queries_jobs_adj") is not None
             or r.get("calib_jobs_sec") is None
             or r["calib_jobs_sec"] / 20.0 <= JOBS_DEGRADED_SEC_PER_JOB
         ]
         if healthy_prior:
             hp = healthy_prior[-1]
-            prev_side = hp.get("queries_jobs_adj") or hp["queries"]
+            prev_side = hp.get("queries_jobs_adj")
+            if prev_side is None:
+                prev_side = hp["queries"]
             common = sorted(set(prev_side) & set(jobs_adj))
             jobs_adj_n_common = len(common)
             prev_sum = sum(prev_side[q] for q in common)

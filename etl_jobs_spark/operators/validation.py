@@ -51,8 +51,10 @@ def nonempty_string(col: str) -> Rule:
 
 def numeric_range(col: str, lo: float, hi: float) -> Rule:
     """Castable number within [lo, hi] (ref: src/etl_2018.py:26-31 —
-    the int(age) try/except plus 0 <= age <= 150 domain)."""
-    c = F.col(col).cast("double")
+    the int(age) try/except plus 0 <= age <= 150 domain). A string
+    that is not a number fails the rule: ``try_cast`` gives NULL where
+    a plain cast raises CAST_INVALID_INPUT under ANSI."""
+    c = F.col(col).try_cast("double")
     return Rule(f"range_{col}", c.isNotNull() & c.between(lo, hi))
 
 

@@ -1052,6 +1052,34 @@ def embed_kmeans_lloyd(spark, sf_dir):
     return kmeans_lloyd_fit(emb)
 
 
+def _bigint_array(vals) -> str:
+    """Spark SQL array<bigint> literal; None becomes a typed NULL."""
+    return "array(" + ",".join(
+        "CAST(NULL AS BIGINT)" if v is None else f"{v}L" for v in vals
+    ) + ")"
+
+
+def _int_values(spark, cols, rows):
+    """Integer rows as a ``VALUES`` local relation: collecting it
+    launches no Spark job, where ``createDataFrame(list)`` ships the
+    rows through one Python-worker job. ``cols`` is ``[(name,
+    sql_type)]``; every value is a Python int or None, so the literal
+    text needs no escaping."""
+    aliases = [f"c{i}" for i in range(len(cols))]
+    body = ", ".join(
+        "(" + ", ".join("NULL" if v is None else str(int(v)) for v in r) + ")"
+        for r in rows or [[None] * len(cols)]
+    )
+    proj = ", ".join(
+        f"CAST({a} AS {typ}) AS {name}"
+        for a, (name, typ) in zip(aliases, cols)
+    )
+    return spark.sql(
+        f"SELECT {proj} FROM VALUES {body} AS t({', '.join(aliases)})"
+        + ("" if rows else " WHERE false")
+    )
+
+
 def kmeans_lloyd_fit(emb, k=_KM_K, rounds=_KM_ROUNDS):
     """Integer Lloyd fit over any DataFrame with (vec_id,
     embedding array<float>) — separated from the fixture read so
@@ -1084,19 +1112,22 @@ def kmeans_lloyd_fit(emb, k=_KM_K, rounds=_KM_ROUNDS):
         # empty corpus -> no init points -> no clusters; the oracle's
         # grouped re-fit over the same empty table is also empty
         # (round-11 empty-input axis)
-        return spark.createDataFrame(
+        return _int_values(
+            spark,
+            [
+                ("cluster_id", "INT"),
+                ("n_vecs", "BIGINT"),
+                ("inertia", "BIGINT"),
+                ("c_sum", "BIGINT"),
+                ("c_absum", "BIGINT"),
+            ],
             [],
-            "cluster_id INT, n_vecs BIGINT, inertia BIGINT, "
-            "c_sum BIGINT, c_absum BIGINT",
         )
-
-    def lit_arr(vals):
-        return "array(" + ",".join(f"{v}L" for v in vals) + ")"
 
     def assign_expr(cs):
         structs = ", ".join(
             "struct(aggregate(zip_with(q, "
-            + lit_arr(c)
+            + _bigint_array(c)
             + ", (x, y) -> (x - y) * (x - y)), 0L, "
             "(acc, v) -> acc + v) AS dist, "
             f"{cid} AS cid)"
@@ -1134,12 +1165,10 @@ def kmeans_lloyd_fit(emb, k=_KM_K, rounds=_KM_ROUNDS):
         F.count(F.lit(1)).cast("long").alias("n_vecs"),
         F.sum("best.dist").cast("long").alias("inertia"),
     )
-    sig = spark.createDataFrame(
-        [
-            (cid, int(sum(c)), int(sum(abs(x) for x in c)))
-            for cid, c in cents
-        ],
-        "cluster_id int, c_sum long, c_absum long",
+    sig = _int_values(
+        spark,
+        [("cluster_id", "INT"), ("c_sum", "BIGINT"), ("c_absum", "BIGINT")],
+        [(cid, sum(c), sum(abs(x) for x in c)) for cid, c in cents],
     )
     return stats.join(F.broadcast(sig), "cluster_id").select(
         "cluster_id", "n_vecs", "inertia", "c_sum", "c_absum"
@@ -1166,11 +1195,13 @@ _PCA_BIG = 1_000_000_000_000  # 1e12
 
 def _pca_oracle() -> str:
     parts = [
-        f"""lf AS (
+        f"""chk AS ({SIM.unique_ids_check_sql()}),
+    lf AS (
       SELECT vec_id, CAST(d AS INT) AS d, q FROM (
         SELECT vec_id, unnest({_km_quant("duckdb")}) AS q,
                generate_subscripts(embedding, 1) AS d
-        FROM embeddings)),
+        FROM embeddings
+        WHERE (SELECT ok FROM chk) = 1)),
     v0 AS (
       SELECT d, CAST({_PCA_VS} AS BIGINT) AS v
       FROM (SELECT DISTINCT d FROM lf))"""
@@ -1218,69 +1249,79 @@ def embed_pca_power_iter(spark, sf_dir):
     upscale never forms w * 1e6 when w is already large (the sf0.1
     fixture overflowed that multiply at just 2k vectors — the sums
     were fine, the renorm product was not).
-    Scale shape: X'X is NEVER materialized (d^2 would be
-    fine, but n x d^2 intermediate wouldn't) — each iteration is two
-    corpus joins: long-form x broadcast-v (64 rows), then the
-    vec-keyed re-join for the co-product, both combinable
-    aggregations; the iterate itself is always 64 rows. Ref: the
-    classic two-pass matvec decomposition of power iteration
-    (Halko/Martinsson/Tropp randomized-SVD literature)."""
-    emb = read_table(spark, sf_dir, "embeddings")
-    lf = cache.track(
-        emb.select(
-            "vec_id",
-            F.posexplode(F.expr(_km_quant("spark"))).alias("d", "q"),
+    Scale shape: X'X is NEVER materialized, and the corpus is never
+    joined. The quantized corpus is cached once as array<bigint>;
+    each iteration is ONE pass over it: the iterate ``v`` rides into
+    the projection as a 64-element array literal, so ``t`` is a
+    map-side ``zip_with`` dot per vector, and one posexplode/groupBy(d)
+    partial-agg shuffle collects the 64-row ``w``. The renormalization
+    runs on the driver over those 64 ints (the k-means fit's
+    bounded-driver-data pattern) and the result is a VALUES local
+    relation. A warm execution is seven Spark jobs: the cache build,
+    then a map job and a result job per iteration. Ref: the classic two-pass matvec decomposition of power
+    iteration (Halko/Martinsson/Tropp randomized-SVD literature).
+
+    ``t`` is per vector, so it matches the oracle's per-``vec_id``
+    group only under the fit tier's unique-vec_id contract, which
+    both engines check and fail loudly on."""
+    qdf = cache.track(
+        checked_embeddings(spark, sf_dir).select(
+            F.expr(_km_quant("spark")).alias("q")
         )
     )
-    v = (
-        lf.select("d")
-        .distinct()
-        .select("d", F.lit(_PCA_VS).cast("bigint").alias("v"))
-    )
-    w = None
+    # iteration 0 starts from v = _PCA_VS in every dimension
+    v_arr = f"array_repeat({_PCA_VS}L, size(q))"
     for _ in range(_PCA_ITERS):
+        # SQL sum semantics, like the oracle's grouped sum: NULL
+        # products are skipped and an all-NULL dot stays NULL
         t = (
-            lf.join(F.broadcast(v), "d")
-            .groupBy("vec_id")
-            .agg(
-                F.expr(
-                    f"CAST(sum(q * v) DIV {_PCA_SHIFT} AS BIGINT)"
-                ).alias("t")
-            )
+            f"aggregate(zip_with(q, {v_arr}, (x, y) -> x * y),"
+            " CAST(NULL AS BIGINT),"
+            " (acc, p) -> CASE WHEN p IS NULL THEN acc"
+            " ELSE coalesce(acc, 0L) + p END)"
+            f" DIV {_PCA_SHIFT}"
         )
-        # Eager 64-row checkpoint per iteration (optimization r15,
-        # guide §2.4/§5 lineage truncation): w feeds BOTH m and v,
-        # and v feeds BOTH the next iteration's t and the final
-        # join, so the lazily-composed loop duplicated the whole
-        # per-iteration subtree ~2x per branch — the final plan
-        # re-ran the two corpus joins for every duplicated copy
-        # (measured: 164 Spark jobs / 4.8s at sf0.1 before; ~20
-        # jobs after; identical integers — localCheckpoint changes
-        # lineage, not arithmetic). The iterate is always exactly
-        # `dim` rows, so the checkpoint materializes 64 rows.
-        w = (
-            lf.join(t, "vec_id")
+        # t in its own projection: selected beside the generator it
+        # would be evaluated once per exploded element, 64x per vector
+        rows = (
+            qdf.select("q", F.expr(t).alias("t"))
+            .select(F.posexplode("q").alias("d", "qv"), "t")
             .groupBy("d")
-            .agg(F.sum(F.col("q") * F.col("t")).cast("bigint").alias("w"))
-            .localCheckpoint(eager=True)
+            .agg(F.sum(F.col("qv") * F.col("t")).cast("bigint").alias("w"))
+            .collect()
         )
-        m = w.agg(F.max(F.abs(F.col("w"))).alias("m"))
-        v = w.crossJoin(F.broadcast(m)).select(
-            "d",
-            F.expr(
-                f"CAST(CASE WHEN m >= {_PCA_BIG}"
-                f" THEN w DIV (m DIV {_PCA_VS})"
-                f" ELSE w * {_PCA_VS} DIV m END AS BIGINT)"
-            ).alias("v"),
-        )
+        # posexplode positions are 0..dim-1, every one present
+        w = [None] * len(rows)
+        for r in rows:
+            w[r.d] = r.w
+        v = _pca_renorm(w)
+        v_arr = _bigint_array(v)
     # posexplode is 0-based; the oracle's generate_subscripts is
-    # 1-based — internal joins are self-consistent, only the output
-    # key needs the +1 alignment.
-    return v.join(w.withColumnRenamed("w", "w_last"), "d").select(
-        (F.col("d") + 1).cast("int").alias("d"),
-        F.col("v").alias("loading_scaled"),
-        "w_last",
+    # 1-based, so the output key takes the +1.
+    return _int_values(
+        spark,
+        [("d", "INT"), ("loading_scaled", "BIGINT"), ("w_last", "BIGINT")],
+        [(d + 1, v[d], w[d]) for d in range(len(w))],
     )
+
+
+def _tdiv(a, b):
+    """Integer division truncating toward zero, as Spark's DIV and
+    DuckDB's ``//`` do (Python's ``//`` floors); NULL operands and a
+    zero divisor give None, as in the oracle."""
+    if a is None or b is None or b == 0:
+        return None
+    q = abs(a) // abs(b)
+    return q if (a < 0) == (b < 0) else -q
+
+
+def _pca_renorm(w):
+    """Max-abs renormalization of the iterate to _PCA_VS, the oracle's
+    ``v{r+1}`` CTE on the driver."""
+    m = max((abs(x) for x in w if x is not None), default=None)
+    if m is not None and m >= _PCA_BIG:
+        return [_tdiv(x, _tdiv(m, _PCA_VS)) for x in w]
+    return [_tdiv(None if x is None else x * _PCA_VS, m) for x in w]
 
 
 # ---------------------------------------------------------------- #

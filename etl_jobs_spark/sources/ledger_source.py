@@ -87,8 +87,10 @@ def _batch_to_jsonl(batch) -> str:
     non-finite spellings special-cased to json.dumps' Infinity/NaN;
     strings go through the SAME ``encode_basestring_ascii`` function
     json.dumps calls. Any other arrow type falls back to the exact
-    old loop. The write->read double fidelity contract (shortest
-    round-trip repr) is therefore unchanged."""
+    old loop, and so does any field name that json.dumps would
+    escape. The write->read double fidelity contract (shortest
+    round-trip repr) is therefore unchanged. A batch with no columns
+    serializes to "": it has no field to record."""
     import math
     from json.encoder import encode_basestring_ascii as _esc
 
@@ -119,9 +121,12 @@ def _batch_to_jsonl(batch) -> str:
         return None
 
     names = batch.schema.names
-    if any('"' in n or "\\" in n or "%" in n for n in names):
-        # a field name needing escaping (never the ledger schema):
-        # exact old behavior
+    if not names:
+        return ""
+    if any(json.dumps(n) != f'"{n}"' or "%" in n for n in names):
+        # a field name json.dumps escapes (quotes, backslashes,
+        # control or non-ASCII characters) or one that would break
+        # the %-template; never the ledger schema: exact old behavior
         return "".join(json.dumps(r) + "\n" for r in batch.to_pylist())
     cols = []
     for i, name in enumerate(names):

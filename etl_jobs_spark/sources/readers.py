@@ -38,6 +38,45 @@ FIXTURE_TABLES = (
 )
 
 
+#: Inferred parquet schema per path: the file identity it was inferred
+#: from and the StructType (see read_table).
+_SCHEMAS: dict[str, tuple[tuple, T.StructType]] = {}
+
+
+def _file_identity(spark: SparkSession, path: str) -> tuple | None:
+    """(size, mtime) of every file under ``path``, listed through the
+    Hadoop FileSystem so every URI scheme takes the same route; None
+    when the path cannot be listed."""
+    from py4j.java_gateway import JavaClass
+    from py4j.protocol import Py4JJavaError
+
+    gateway = spark.sparkContext._gateway._gateway_client
+    p = JavaClass("org.apache.hadoop.fs.Path", gateway)(path)
+    try:
+        files = p.getFileSystem(spark._jsc.hadoopConfiguration()).listFiles(
+            p, True
+        )
+        out = []
+        while files.hasNext():
+            st = files.next()
+            out.append((st.getLen(), st.getModificationTime()))
+    except Py4JJavaError:
+        return None
+    return tuple(out)
+
+
+def _parquet_schema(spark: SparkSession, path: str) -> T.StructType:
+    ident = _file_identity(spark, path)
+    hit = _SCHEMAS.get(path)
+    if ident is not None and hit is not None and hit[0] == ident:
+        return hit[1]
+    # an unlistable path falls through to Spark's own error here
+    schema = spark.read.parquet(path).schema
+    if ident is not None:
+        _SCHEMAS[path] = (ident, schema)
+    return schema
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one fixture table as parquet (lazy, pruned, pushed-down).
 
@@ -48,20 +87,36 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     rebuild a proper TimestampType with *integer* division to micros:
     a double-division here would silently lose precision, since
     epoch-nanos ≈ 1.7e18 exceeds the 2^53 double mantissa.
+
+    Schema memo: ``spark.read.parquet`` infers the schema from a
+    footer, and that inference is one Spark job per call. The first
+    read of a table remembers the inferred StructType; later reads
+    pass it with ``spark.read.schema(...)``, which launches no job.
+    The memo key is the path, and an entry is only used while the
+    files under the path are the ones it was inferred from: the size
+    and modification time of every file, listed through the Hadoop
+    FileSystem on each call. A rewritten table changes that listing
+    and is re-inferred. ``nanosAsLong`` changes the inferred type of
+    a nanos column, so every read sets it, not only the ``events``
+    read: all schemas are then inferred under the same setting, and a
+    table's schema does not depend on whether ``events`` was read
+    earlier in the session (the setting is session-wide).
     """
     # Oracle parity must not depend on the host timezone: the driver
     # may hand us a session without engine conf, so pin UTC here too
     # (session-settable, idempotent).
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000"))
-            )
-        return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    path = f"{sf_dir}/{name}.parquet"
+    schema = _parquet_schema(spark, path)
+    df = spark.read.schema(schema).parquet(path)
+    if (
+        name == "events"
+        and "ts" in schema.names
+        and isinstance(schema["ts"].dataType, T.LongType)
+    ):
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return df
 
 
 def spread(df: DataFrame) -> DataFrame:

@@ -79,8 +79,12 @@ def _lock_path(root: str | Path) -> Path | None:
     elif "://" in s:
         return None
     p = Path(s)
-    # sibling, not child: overwrite mode recreates the root dir
-    return p.with_name(p.name + ".__write_lock")
+    # sibling, not child: overwrite mode recreates the root dir. The
+    # "." prefix hides the lock and its .judge sidecar from Spark's
+    # file index when the sibling sits inside a table root (a
+    # partition directory): Spark skips "."-prefixed names, but not
+    # "_"-prefixed ones that contain "=" (they may be partitions).
+    return p.with_name(f".{p.name}.__write_lock")
 
 
 def _read_token(path: Path) -> str | None:

@@ -57,7 +57,7 @@ from pyspark.sql import functions as F
 from etl_jobs_spark.scratch import scratch_dir
 from etl_jobs_spark.session import get_spark
 from etl_jobs_spark.sources import writers
-from etl_jobs_spark.sources.write_lock import ConcurrentWriteError
+from etl_jobs_spark.sources.write_lock import ConcurrentWriteError, _lock_path
 
 N_ROWS = 20_000
 
@@ -453,7 +453,7 @@ def cell_lock_holder_crash_recovery(spark, sf_dir):
     child.send_signal(signal.SIGKILL)
     child.wait()
 
-    lock = Path(str(root) + ".__write_lock")
+    lock = _lock_path(root)
     if not lock.exists():
         return False, "lockfile vanished with the crash (nothing to break)"
 

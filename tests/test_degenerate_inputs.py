@@ -43,6 +43,7 @@ EMPTY_SAMPLE = [
     "dedup_lsh_recall_eval",        # recall/precision NULL on 0 truth
     "embed_ivfpq_topk",             # driver-side fit on empty collect
     "embed_kmeans_lloyd",           # zero-init-points guard
+    "embed_pca_power_iter",         # zero-dim iterate, empty VALUES
     "text_bpe_learn",               # pair argmax early-stop
     "graph_pagerank_transitions",   # zero-node teleport guard
     "obs_run_metrics",              # None observation counters
@@ -612,8 +613,9 @@ def test_fit_tier_rejects_duplicate_ids_loudly(spark, dup_orphan_dir):
     any unrecognized corpus instead of returning zero rows)."""
     import duckdb
 
-    with pytest.raises(ValueError, match="requires unique vec_id"):
-        QUERIES["embed_kmeans_lloyd"](spark, dup_orphan_dir).collect()
+    for name in ("embed_kmeans_lloyd", "embed_pca_power_iter"):
+        with pytest.raises(ValueError, match="requires unique vec_id"):
+            QUERIES[name](spark, dup_orphan_dir).collect()
 
     con = duckdb.connect()
     for t in FIXTURE_TABLES:
@@ -621,7 +623,8 @@ def test_fit_tier_rejects_duplicate_ids_loudly(spark, dup_orphan_dir):
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{dup_orphan_dir}/{t}.parquet')"
         )
-    with pytest.raises(duckdb.Error, match="unique vec_id"):
-        con.sql(ORACLES["embed_kmeans_lloyd"]).df()
+    for name in ("embed_kmeans_lloyd", "embed_pca_power_iter"):
+        with pytest.raises(duckdb.Error, match="unique vec_id"):
+            con.sql(ORACLES[name]).df()
     with pytest.raises(duckdb.Error, match="unrecognized embeddings"):
         con.sql(ORACLES["embed_ivf_topk"]).df()

@@ -200,3 +200,20 @@ def test_batch_to_jsonl_byte_identical_to_json_dumps():
     )
     want2 = "".join(json.dumps(r) + "\n" for r in batch2.to_pylist())
     assert _batch_to_jsonl(batch2) == want2
+
+
+def test_batch_to_jsonl_escaped_field_names_and_zero_columns():
+    """Field names that json.dumps escapes (non-ASCII, control
+    characters, quotes) keep byte identity with the per-row loop; a
+    zero-column batch serializes to nothing."""
+    import json
+
+    import pyarrow as pa
+
+    from etl_jobs_spark.sources.ledger_source import _batch_to_jsonl
+
+    for name in ("café", "tab\there", 'q"uote', "pct%s"):
+        batch = pa.record_batch({name: pa.array([1, None], pa.int64())})
+        want = "".join(json.dumps(r) + "\n" for r in batch.to_pylist())
+        assert _batch_to_jsonl(batch) == want, name
+    assert _batch_to_jsonl(pa.record_batch({})) == ""

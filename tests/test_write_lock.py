@@ -65,7 +65,7 @@ def test_lock_is_sibling_not_child(tmp_path):
     # overwrite mode deletes the root's contents — the lock must
     # survive that, so it lives NEXT TO the root
     p = _lock_path(tmp_path / "tbl")
-    assert p.parent == tmp_path and p.name == "tbl.__write_lock"
+    assert p.parent == tmp_path and p.name == ".tbl.__write_lock"
 
 
 def test_uri_and_object_store_paths(tmp_path):
@@ -112,6 +112,31 @@ def test_locked_sink_parquet_serializes_two_appenders(spark, tmp_path):
         .collect()
     }
     assert counts == {"A": 5000, "B": 5000}
+
+
+def test_partition_direct_write_leaves_no_visible_debris(spark, tmp_path):
+    """sink_parquet_partitions_direct locks each partition directory,
+    so the lock and its .judge sidecar sit inside the table root.
+    They must be hidden from Spark's file index: the table reads back,
+    and every non-hidden file under the root is parquet."""
+    from etl_jobs_spark.sources import writers
+
+    root = tmp_path / "tbl"
+    rows = [(1, "mon"), (2, "tue"), (3, "tue")]
+    df = spark.createDataFrame(rows, "event_id BIGINT, day STRING")
+    writers.sink_parquet_partitions_direct(df, str(root), "day")
+
+    back = spark.read.parquet(str(root))
+    assert {(r["event_id"], r["day"]) for r in back.collect()} == set(rows)
+    visible = [
+        p.relative_to(root)
+        for p in root.rglob("*")
+        if p.is_file()
+        and not any(
+            part.startswith((".", "_")) for part in p.relative_to(root).parts
+        )
+    ]
+    assert visible and all(p.suffix == ".parquet" for p in visible), visible
 
 
 # ---- round-15 ownership-token semantics (ADVICE r14, medium) ----
