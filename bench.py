@@ -422,128 +422,91 @@ def main() -> None:
             "min(start, mid) (steady state)",
             file=sys.stderr,
         )
-    # pre-stage streaming fixture inputs (memoized) so stream_* timings
-    # measure the streaming operators, not the one-time test staging
+    # Shared memoized fixtures are SETUP by policy, never part of a
+    # timed span: each first consumer would otherwise pay the whole
+    # one-time build (e.g. ~2.8s of the 5.4s join_dpp_pruned recorded
+    # in BENCH_r05 was staging; the first r15 window re-paid the 12.5s
+    # interval-join drain inside one retimed row). One list, staged
+    # before the first pass (narrated) and again before the retime
+    # pass, which clears the staging memos. A group labelled None is
+    # staged without a timing line.
     from etl_jobs_spark.queries import analytics_ext as AQ
-    from etl_jobs_spark.queries import streaming as SQ
-
-    for fmt, n in [("parquet", 1), ("parquet", 2), ("csv", 4)]:
-        SQ._stage(spark, sf_dir, fmt, n)
-    # the interval-join trio reads ONE shared full-outer drain
-    # (VERDICT r8 item 4); drain it here so each cell times its
-    # filter over the matrix, not the one-time micro-batch drain
-    t0 = time.perf_counter()
-    SQ._interval_join_matrix(spark, sf_dir).count()
-    print(
-        f"# shared interval-join matrix drain: "
-        f"{time.perf_counter() - t0:.3f}s",
-        file=sys.stderr,
-    )
-    # the custom-source queries share one staged JSONL ledger; stage it
-    # here so stream_source_custom times the drain, not the fixture write
-    AQ.stage_jsonl(spark, sf_dir)
-    # pre-stage the partitioned events layout and the DPP dim fixture
-    # (both memoized): scan_partition_pruned / join_dpp_pruned then
-    # time the pruned scans, not the one-time layout writes (~2.8s
-    # of the 5.4s join_dpp_pruned recorded in BENCH_r05 was staging).
-    AQ._staged_partitioned(spark, sf_dir)
-    AQ._dpp_dim_path(spark, sf_dir)
-    # pre-stage the shared MinHash pair memo (session_memo used by
-    # dedup_minhash_lsh, dedup_cluster_components AND
-    # dedup_lsh_recall_eval): the first alphabetical dedup consumer
-    # was paying the whole shared signature build (~10s of
-    # dedup_lsh_recall_eval's r6 number). Same policy as the DPP
-    # dim: shared fixtures are setup, not the operator. The memo
-    # cost is printed here and recorded in docs/PERF_r07.md.
     from etl_jobs_spark.queries import dedup as DQ
-
-    t0 = time.perf_counter()
-    DQ._minhash_pairs(spark, sf_dir).count()
-    print(
-        f"# shared minhash pair memo: {time.perf_counter() - t0:.3f}s",
-        file=sys.stderr,
-    )
-    # round-9 (VERDICT r8 item 6): the rest of the dedup memo set —
-    # the exact-gram table (Jaccard/containment truth side, read by
-    # dedup_lsh_recall_eval) and the LSH component labels (read by
-    # dedup_cross_source_matrix / cluster histograms) — so the
-    # recall-eval family stops paying first-consumer staging in
-    # whatever order the sweep visits it.
-    t0 = time.perf_counter()
-    DQ._doc_grams(spark, sf_dir).count()
-    DQ._lsh_components(spark, sf_dir).count()
-    DQ._jaccard_pairs(spark, sf_dir).count()
-    print(
-        f"# shared doc-gram + LSH-component + jaccard-pair memos: "
-        f"{time.perf_counter() - t0:.3f}s",
-        file=sys.stderr,
-    )
-    # same policy for the round-7 shared artifacts: the substring
-    # span table (reported by dedup_substring_spans, consumed by
-    # dedup_substring_coverage) and the learned BPE merge table
-    # (reported by text_bpe_learn, consumed by
-    # text_bpe_apply_learned).
+    from etl_jobs_spark.queries import graph_analytics as GQ
+    from etl_jobs_spark.queries import multimodal as MMQ
+    from etl_jobs_spark.queries import similarity as SIMQ
+    from etl_jobs_spark.queries import streaming as SQ
     from etl_jobs_spark.queries import text_analysis as TXQ
 
-    t0 = time.perf_counter()
-    DQ._span_table(spark, sf_dir).count()
-    print(
-        f"# shared substring span memo: {time.perf_counter() - t0:.3f}s",
-        file=sys.stderr,
-    )
-    t0 = time.perf_counter()
-    TXQ._learn_merges(spark, sf_dir)
-    print(
-        f"# shared BPE fit memo: {time.perf_counter() - t0:.3f}s",
-        file=sys.stderr,
-    )
-    # same policy for the round-8 shared graph artifacts: the
-    # co-purchase edge table + degree map (reported by
-    # graph_triangle_count, walked by graph_bfs_hops) — VERDICT r7
-    # item 4: first-consumer-pays was a bench distortion.
-    from etl_jobs_spark.queries import graph_analytics as GQ
+    def _called(*builders, count: bool = False):
+        def stage():
+            for build in builders:
+                out = build(spark, sf_dir)
+                if count:
+                    out.count()
 
-    t0 = time.perf_counter()
-    GQ._copurchase_edges(spark, sf_dir).count()
-    GQ._copurchase_degrees(spark, sf_dir).count()
-    # round-9: the degree-oriented edges + out-adjacency joined the
-    # shared memo set (triangle census and LCC read them)
-    GQ._copurchase_oriented(spark, sf_dir).count()
-    GQ._copurchase_out_adjacency(spark, sf_dir).count()
-    print(
-        f"# shared graph memos: {time.perf_counter() - t0:.3f}s",
-        file=sys.stderr,
-    )
-    # round-9: the ANN index memos (coarse IVF cells + PQ codebooks
-    # + cell-partitioned serve layouts) — whichever embed_ query the
-    # sweep visited first was paying the ~10s index fit, the same
-    # first-consumer distortion as the graph/media/minhash memos
-    from etl_jobs_spark.queries import similarity as SIMQ
+        return stage
 
-    t0 = time.perf_counter()
-    SIMQ.ivf_index(spark, sf_dir)
-    SIMQ.pq_index_expr(spark, sf_dir)
-    SIMQ.ivfpq_index_expr(spark, sf_dir)
-    SIMQ.ivf_append_index(spark, sf_dir)
-    print(
-        f"# shared ANN index memos (IVF + IVF-PQ fit): "
-        f"{time.perf_counter() - t0:.3f}s",
-        file=sys.stderr,
-    )
-    # same policy for the shared media fixture: generate_media now
-    # also entropy-encodes a baseline JPEG per doc (round-8 codec),
-    # which roughly tripled the staging the FIRST decode consumer
-    # paid (multimodal_decode_png_bmp read 4.41s in the first r08
-    # run vs 1.58s in r07 — all staging, not decode).
-    from etl_jobs_spark.queries import multimodal as MMQ
+    def _counted(*builders):
+        return _called(*builders, count=True)
 
-    t0 = time.perf_counter()
-    MMQ._stage_media(spark, sf_dir)
-    print(
-        f"# shared media fixture (PNG/BMP/JPEG/WAV encode): "
-        f"{time.perf_counter() - t0:.3f}s",
-        file=sys.stderr,
-    )
+    def _stage_streaming():
+        for fmt, n in [("parquet", 1), ("parquet", 2), ("csv", 4)]:
+            SQ._stage(spark, sf_dir, fmt, n)
+
+    shared_fixtures = [
+        # streaming fixture inputs: stream_* rows time the operators
+        (None, _stage_streaming),
+        # the interval-join trio reads ONE shared full-outer drain
+        # (VERDICT r8 item 4): each cell times its filter over it
+        ("shared interval-join matrix drain",
+         _counted(SQ._interval_join_matrix)),
+        # the custom-source queries' staged JSONL ledger, the
+        # partitioned events layout and the DPP dim fixture
+        (None, _called(
+            AQ.stage_jsonl, AQ._staged_partitioned, AQ._dpp_dim_path
+        )),
+        # the MinHash pair memo shared by dedup_minhash_lsh,
+        # dedup_cluster_components and dedup_lsh_recall_eval
+        # (recorded in docs/PERF_r07.md)
+        ("shared minhash pair memo", _counted(DQ._minhash_pairs)),
+        # round-9 (VERDICT r8 item 6): the rest of the dedup memo set
+        # (exact-gram truth side, LSH component labels, jaccard pairs)
+        ("shared doc-gram + LSH-component + jaccard-pair memos",
+         _counted(DQ._doc_grams, DQ._lsh_components, DQ._jaccard_pairs)),
+        # round-7 shared artifacts: the substring span table and the
+        # learned BPE merge table
+        ("shared substring span memo", _counted(DQ._span_table)),
+        ("shared BPE fit memo", _called(TXQ._learn_merges)),
+        # round-8/9 shared graph artifacts (VERDICT r7 item 4): edge
+        # table, degree map, degree-oriented edges, out-adjacency
+        ("shared graph memos", _counted(
+            GQ._copurchase_edges, GQ._copurchase_degrees,
+            GQ._copurchase_oriented, GQ._copurchase_out_adjacency,
+        )),
+        # round-9 ANN index memos (~10s index fit otherwise paid by
+        # whichever embed_ query the sweep visits first)
+        ("shared ANN index memos (IVF + IVF-PQ fit)", _called(
+            SIMQ.ivf_index, SIMQ.pq_index_expr, SIMQ.ivfpq_index_expr,
+            SIMQ.ivf_append_index,
+        )),
+        # the media fixture also entropy-encodes a baseline JPEG per
+        # doc (round-8 codec), which the first decode consumer paid
+        ("shared media fixture (PNG/BMP/JPEG/WAV encode)",
+         _called(MMQ._stage_media)),
+    ]
+
+    def _prestage_shared(narrate: bool) -> None:
+        for label, stage in shared_fixtures:
+            t0 = time.perf_counter()
+            stage()
+            if narrate and label:
+                print(
+                    f"# {label}: {time.perf_counter() - t0:.3f}s",
+                    file=sys.stderr,
+                )
+
+    _prestage_shared(narrate=True)
     # warm the Python DataSource runtime (worker pool + Arrow writer
     # spin-up is a ~6.5s one-time cost in a fresh JVM — VERDICT r4):
     # a 100-row ledger write+read here makes sink_custom_ledger's
@@ -566,36 +529,6 @@ def main() -> None:
         f"# python-datasource cold spin-up: {time.perf_counter() - t0:.3f}s",
         file=sys.stderr,
     )
-
-    def _prestage_shared() -> None:
-        """Re-stage every SHARED memoized fixture the block above
-        pre-staged (sans narration) — the retime pass clears the
-        staging memos to keep per-row staging costs on the same
-        basis as run 1, but shared fixtures are SETUP by policy and
-        must stay outside timed spans in BOTH passes (the first r15
-        window re-paid the 12.5s interval-join drain inside one
-        retimed row before this hook existed)."""
-        for fmt_n in [("parquet", 1), ("parquet", 2), ("csv", 4)]:
-            SQ._stage(spark, sf_dir, *fmt_n)
-        SQ._interval_join_matrix(spark, sf_dir).count()
-        AQ.stage_jsonl(spark, sf_dir)
-        AQ._staged_partitioned(spark, sf_dir)
-        AQ._dpp_dim_path(spark, sf_dir)
-        DQ._minhash_pairs(spark, sf_dir).count()
-        DQ._doc_grams(spark, sf_dir).count()
-        DQ._lsh_components(spark, sf_dir).count()
-        DQ._jaccard_pairs(spark, sf_dir).count()
-        DQ._span_table(spark, sf_dir).count()
-        TXQ._learn_merges(spark, sf_dir)
-        GQ._copurchase_edges(spark, sf_dir).count()
-        GQ._copurchase_degrees(spark, sf_dir).count()
-        GQ._copurchase_oriented(spark, sf_dir).count()
-        GQ._copurchase_out_adjacency(spark, sf_dir).count()
-        SIMQ.ivf_index(spark, sf_dir)
-        SIMQ.pq_index_expr(spark, sf_dir)
-        SIMQ.ivfpq_index_expr(spark, sf_dir)
-        SIMQ.ivf_append_index(spark, sf_dir)
-        MMQ._stage_media(spark, sf_dir)
 
     timings: dict[str, float] = {}
     jobs: dict[str, int] = {}
@@ -688,7 +621,7 @@ def main() -> None:
         cache.clear_staging_memos()
         cache.release_all()
         t0 = time.perf_counter()
-        _prestage_shared()
+        _prestage_shared(narrate=False)
         print(
             f"# retime pass: shared fixtures re-staged in "
             f"{time.perf_counter() - t0:.3f}s",

@@ -283,15 +283,22 @@ def with_global_position(
 
     The per-partition counts are COLLECTED (bounded: one row per
     range partition, <= n — the kmeans-centroid class of bounded
-    driver collect) and attached as a literal CASE expression
-    rather than joined: a join of two branches of the same cached
-    plan is a self-join, and DeduplicateRelations re-aliases one
-    side's expression ids, which stops the nondeterministic-marked
-    spark_partition_id projection from matching the cache entry —
+    driver collect) and attached as a literal offset array indexed
+    by partition id — one constant after folding, where a CASE chain
+    grows a branch per partition toward codegen size limits at
+    cluster partition counts — rather than joined: a join of two branches of
+    the same cached plan is a self-join, and DeduplicateRelations
+    re-aliases one side's expression ids, which stops the
+    nondeterministic-marked spark_partition_id projection from
+    matching the cache entry —
     the de-aliased branch silently re-executed the range exchange
     with fresh boundaries (measured: 345/5000 rows moved), skewing
     every offset. The collect consumes the cache it just built, so
     exactly one execution of the exchange ever exists.
+
+    Contract: the call is EAGER — it runs that collect job (building
+    the cache) before returning — and the persisted ranged table
+    stays registered with ``cache`` until ``cache.release_all()``.
     """
     from etl_jobs_spark import cache
 
@@ -308,17 +315,15 @@ def with_global_position(
         .agg(F.count(F.lit(1)).alias("_gp_cnt"))
         .collect()
     )
-    offs: dict[int, int] = {}
-    run = 0
-    for pid, cnt in sizes:
-        offs[pid] = run
-        run += cnt
-    off_expr = F.lit(0)
-    if offs:
-        branches = " ".join(
-            f"WHEN {pid} THEN {off}L" for pid, off in offs.items()
-        )
-        off_expr = F.expr(f"CASE _gp_pid {branches} ELSE 0L END")
+    # offs[p] = rows in the partitions before p, for every p < n
+    cnts = dict(sizes)
+    offs, run = [], 0
+    for pid in range(n):
+        offs.append(run)
+        run += cnts.get(pid, 0)
+    off_expr = F.expr(
+        f"element_at(array({', '.join(f'{o}L' for o in offs)}), _gp_pid + 1)"
+    )
     w_local = Window.partitionBy("_gp_pid").orderBy(*order_cols)
     result = ranged.withColumn(
         out,

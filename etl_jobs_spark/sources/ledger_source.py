@@ -351,25 +351,6 @@ class LedgerWriter(DataSourceArrowWriter):
     def __init__(self, options: dict, overwrite: bool = False):
         self.path = options["path"]
         self.overwrite = overwrite
-        # Exclusive job-scope write lock, acquired at plan time on
-        # the driver and released in commit/abort: the manifest
-        # commit is read-merge-write and (overwrite or not) ends by
-        # deleting unclaimed ledger files — two UNSERIALIZED jobs
-        # would each merge the same prior manifest (lost update) and
-        # the first committer would delete the second's in-flight
-        # parts. The lock is the commit-log mutual exclusion a
-        # transactional format provides; uncontended cost is two
-        # syscalls. (Unpickling on executors never re-runs __init__,
-        # so only the driver touches the lock.)
-        from etl_jobs_spark.sources.write_lock import acquire_table_lock
-
-        # the token travels WITH this (picklable) writer: plan-time
-        # acquire and job-commit release run in different Python
-        # worker processes, so the lock module's process-local
-        # ownership record can't connect them (round-15 regression:
-        # a token-verified release that consulted only process state
-        # no-opped here and leaked the lock for stale_sec)
-        self._lock_token = acquire_table_lock(self.path, timeout_sec=120.0)
 
     def write(self, iterator):
         import uuid
@@ -391,51 +372,57 @@ class LedgerWriter(DataSourceArrowWriter):
         return _LedgerCommit(name, n)
 
     def commit(self, messages):
-        manifest_path = os.path.join(self.path, "_LEDGER_COMMIT.manifest")
-        total = 0
-        files = []
-        # an append job EXTENDS the committed file list; an overwrite
-        # job records only its own parts and clears the old ledger
-        # LAST — the destructive step is deferred to job-commit so an
-        # aborted overwrite cannot leave an empty ledger behind
-        if not self.overwrite and os.path.exists(manifest_path):
-            with open(manifest_path) as f:
-                prior = json.load(f)
-            files = list(prior.get("files", []))
-            total = int(prior.get("n_rows", 0))
-        for m in messages:
-            os.rename(
-                os.path.join(self.path, f".{m.filename}.tmp"),
-                os.path.join(self.path, m.filename),
-            )
-            files.append(m.filename)
-            total += m.n_rows
-        manifest = {"files": sorted(files), "n_rows": total}
-        with open(manifest_path, "w") as f:
-            json.dump(manifest, f)
-        if self.overwrite:
-            # new parts + manifest are durable; now drop every ledger
-            # file the new manifest doesn't claim
-            keep = set(files)
-            for n in os.listdir(self.path):
-                if n.endswith(".json") and n not in keep:
-                    os.remove(os.path.join(self.path, n))
-        from etl_jobs_spark.sources.write_lock import release_table_lock
+        from etl_jobs_spark.sources.write_lock import table_write_lock
 
-        release_table_lock(self.path, token=self._lock_token)
+        # The manifest commit is read-merge-write and an overwrite ends
+        # by deleting unclaimed ledger files: two unserialized commits
+        # would each merge the same prior manifest (lost update), and
+        # an overwrite could delete parts the other just renamed in.
+        # Every visible effect of a job happens here, so locking the
+        # commit alone gives concurrent jobs a serial order; in-flight
+        # parts are ``.tmp`` files no cleanup ever matches.
+        with table_write_lock(self.path):
+            manifest_path = os.path.join(self.path, "_LEDGER_COMMIT.manifest")
+            total = 0
+            files = []
+            # an append job EXTENDS the committed file list; an overwrite
+            # job records only its own parts and clears the old ledger
+            # LAST — the destructive step is deferred to job-commit so an
+            # aborted overwrite cannot leave an empty ledger behind
+            if not self.overwrite and os.path.exists(manifest_path):
+                with open(manifest_path) as f:
+                    prior = json.load(f)
+                files = list(prior.get("files", []))
+                total = int(prior.get("n_rows", 0))
+            for m in messages:
+                os.rename(
+                    os.path.join(self.path, f".{m.filename}.tmp"),
+                    os.path.join(self.path, m.filename),
+                )
+                files.append(m.filename)
+                total += m.n_rows
+            manifest = {"files": sorted(files), "n_rows": total}
+            with open(manifest_path, "w") as f:
+                json.dump(manifest, f)
+            if self.overwrite:
+                # new parts + manifest are durable; now drop every ledger
+                # file the new manifest doesn't claim
+                keep = set(files)
+                for n in os.listdir(self.path):
+                    if n.endswith(".json") and n not in keep:
+                        os.remove(os.path.join(self.path, n))
 
     def abort(self, messages):
         # a failed task's commit message arrives as None (pyspark
-        # DataSourceWriter contract) — only surviving tasks left temps
+        # DataSourceWriter contract) — only surviving tasks left temps.
+        # No lock: these are this job's own .tmp files, which no other
+        # job's commit renames or deletes.
         for m in messages:
             if m is None:
                 continue
             tmp = os.path.join(self.path, f".{m.filename}.tmp")
             if os.path.exists(tmp):
                 os.remove(tmp)
-        from etl_jobs_spark.sources.write_lock import release_table_lock
-
-        release_table_lock(self.path, token=self._lock_token)
 
 
 class LedgerStreamWriter(DataSourceStreamArrowWriter):

@@ -95,14 +95,15 @@ def sink_parquet(
     reference's ``processed/`` key-prefix routing, ref:
     src/etl_2025.py:256-257).
 
-    Writes hold the table root's exclusive write lock
-    (sources/write_lock.py): plain parquet shares one
+    Writes hold the table root's exclusive write lock (a kernel
+    ``flock``, sources/write_lock.py): plain parquet shares one
     ``_temporary`` staging dir across concurrent jobs, and the
     round-13 two-writer probe measured both loud failures and one
-    TORN append from that race. Uncontended cost is two syscalls; a
-    second concurrent writer through this API serializes (or fails
-    loudly on timeout) instead of racing. Disjoint-partition
-    concurrency wants ``sink_parquet_partitions_direct`` instead."""
+    TORN append from that race. Uncontended cost is an open, a flock
+    and a close; a second concurrent writer through this API
+    serializes (or fails loudly on timeout) instead of racing.
+    Disjoint-partition concurrency wants
+    ``sink_parquet_partitions_direct`` instead."""
     from etl_jobs_spark.sources.write_lock import table_write_lock
 
     writer = df.write.mode(mode)
@@ -161,7 +162,9 @@ def sink_parquet_partitions_direct(
             dirname = _escape_partition_value(v)
         # lock PER PARTITION DIR: disjoint-value writers stay fully
         # concurrent (the point of this helper); same-value writers
-        # serialize instead of racing one committer root.
+        # serialize instead of racing one committer root. The lock
+        # file (hidden, ".<col>=<value>.__write_lock") stays in the
+        # table root after the write.
         target = f"{root}/{partition_col}={dirname}"
         with table_write_lock(target):
             part.drop(partition_col).write.mode("append").parquet(target)

@@ -15,13 +15,13 @@ outcome. The pinned contract after this round:
   (ConcurrentWriteError / job failure with state equal to one
   complete writer) — ZERO silent torn states.
 
-Mechanism added this round (sources/write_lock.py): an exclusive
-sibling lockfile per table root, held by sink_parquet /
-sink_json_report / compact_parquet / the ledger writer's
-plan-to-commit window, and per PARTITION dir by
-sink_parquet_partitions_direct (disjoint-value writers stay
-concurrent). The raw unlocked race is kept as a measured BASELINE
-cell — the reason the lock exists, never a contract.
+Mechanism (sources/write_lock.py): an exclusive kernel ``flock`` on
+a hidden sibling lock file per table root, held by sink_parquet /
+sink_json_report / compact_parquet / the ledger writer's job commit,
+and per PARTITION dir by sink_parquet_partitions_direct
+(disjoint-value writers stay concurrent). A crashed holder's lock
+dies with its process. The raw unlocked race is kept as a measured
+BASELINE cell — the reason the lock exists, never a contract.
 
 Row → cell map (rows with no write surface are recorded as such):
   sink_jdbc_append          jdbc_two_writers_append (Derby row locks)
@@ -32,7 +32,7 @@ Row → cell map (rows with no write surface are recorded as such):
                             partitions_direct_disjoint + _same_value
   sink_custom_ledger        ledger_append_two_writers (manifest
                             merge + unclaimed-file cleanup race,
-                            serialized by the job-scope lock)
+                            serialized by the commit-scoped lock)
   sink_queue / source_queue queue_disjoint_batch_writers
   (baseline)                parquet_append_raw_unsafe_baseline
   merge_upsert_customers / cdc_apply_changelog /
@@ -57,7 +57,11 @@ from pyspark.sql import functions as F
 from etl_jobs_spark.scratch import scratch_dir
 from etl_jobs_spark.session import get_spark
 from etl_jobs_spark.sources import writers
-from etl_jobs_spark.sources.write_lock import ConcurrentWriteError, _lock_path
+from etl_jobs_spark.sources.write_lock import (
+    ConcurrentWriteError,
+    acquire_table_lock,
+    release_table_lock,
+)
 
 N_ROWS = 20_000
 
@@ -299,10 +303,11 @@ def cell_ledger_two_writers(spark, sf_dir):
     a table on a cluster; also, Spark 4.1 binds a Python data
     source registration to the registering thread's artifact state,
     so sibling in-process threads cannot even resolve the format).
-    The job-scope lock added this round serializes the manifest
-    read-merge-write + unclaimed-file cleanup; without it the first
-    committer deletes the second's in-flight parts and the second's
-    manifest drops the first's rows (lost update both ways)."""
+    The ledger writer locks its job commit, which serializes the
+    manifest read-merge-write + overwrite cleanup; without it both
+    commits merge the same prior manifest and the later one drops
+    the earlier one's rows (lost update). The jobs' write phases run
+    concurrently: their parts stay ``.tmp`` until the commit."""
     import subprocess
 
     from etl_jobs_spark.sources import ledger_source
@@ -417,9 +422,9 @@ NO_WRITE_SURFACE = {
 def cell_lock_holder_crash_recovery(spark, sf_dir):
     """VERDICT r14 item 6: SIGKILL a writer PROCESS while it holds
     the table write lock mid-write (between stage and commit), then
-    prove a second writer recovers promptly via the dead-pid break
-    path — not the 120 s ConcurrentWriteError timeout, not the 1 h
-    stale_sec window — with no torn visible state."""
+    prove a second writer recovers promptly — the kernel drops the
+    dead holder's flock with its fd, so no timeout is waited out —
+    with no torn visible state."""
     import os
     import signal
     import subprocess
@@ -453,19 +458,18 @@ def cell_lock_holder_crash_recovery(spark, sf_dir):
     child.send_signal(signal.SIGKILL)
     child.wait()
 
-    lock = _lock_path(root)
-    if not lock.exists():
-        return False, "lockfile vanished with the crash (nothing to break)"
-
+    # the kernel released the dead holder's lock: it can be taken
+    # at once, with no wait at all
     t0 = time.perf_counter()
     try:
-        # default timeout_sec=30 < the old failure mode (the dead
-        # pid's lock blocking until stale_sec=3600); recovery must
-        # come from the pid-liveness break, i.e. near-instantly
+        release_table_lock(acquire_table_lock(root, timeout_sec=0))
+    except ConcurrentWriteError as e:
+        return False, f"lock still held after the holder died: {e}"
+    took = time.perf_counter() - t0
+    try:
         writers.sink_parquet(_tagged(spark, "B"), str(root), mode="append")
     except ConcurrentWriteError as e:
         return False, f"second writer timed out behind dead holder: {e}"
-    took = time.perf_counter() - t0
 
     back = spark.read.parquet(str(root))
     counts = {
@@ -477,12 +481,11 @@ def cell_lock_holder_crash_recovery(spark, sf_dir):
         counts.get("seed") == 2000
         and counts.get("B") == N_ROWS
         and not torn
-        and not lock.exists()  # B's release cleaned up after itself
         and os.path.exists(str(root / ".part-crash.parquet.tmp"))
     )
     return ok, (
-        f"recovered in {took:.2f}s via dead-pid break, counts={counts}, "
-        f"torn={torn or 'none'}, lock_released={not lock.exists()}"
+        f"lock free {took:.3f}s after the holder died, counts={counts}, "
+        f"torn={torn or 'none'}"
     )
 
 

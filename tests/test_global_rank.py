@@ -45,7 +45,7 @@ def _cols(spec):
 
 
 @pytest.mark.parametrize("oi", range(len(ORDERS)))
-@pytest.mark.parametrize("nparts", [1, 3, 16])
+@pytest.mark.parametrize("nparts", [1, 3, 16, 1024])
 def test_position_matches_row_number(tied_df, oi, nparts):
     order = _cols(ORDERS[oi])
     want = {
