@@ -37,6 +37,13 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from etl_jobs_spark import cache, registry
+from etl_jobs_spark.queries import analytics_ext as AQ
+from etl_jobs_spark.queries import dedup as DQ
+from etl_jobs_spark.queries import graph_analytics as GQ
+from etl_jobs_spark.queries import multimodal as MMQ
+from etl_jobs_spark.queries import similarity as SIMQ
+from etl_jobs_spark.queries import streaming as SQ
+from etl_jobs_spark.queries import text_analysis as TXQ
 from etl_jobs_spark.session import get_spark
 
 #: Round-2 host's calibration time (BENCH_r02.json `calib_sec`).
@@ -293,6 +300,102 @@ HEADLINE = [
 ]
 
 
+def _called(*builders, count: bool = False):
+    def stage(spark, sf_dir: str) -> None:
+        for build in builders:
+            out = build(spark, sf_dir)
+            if count:
+                out.count()
+
+    return stage
+
+
+def _counted(*builders):
+    return _called(*builders, count=True)
+
+
+def _stage_streaming(spark, sf_dir: str) -> None:
+    for fmt, n in [("parquet", 1), ("parquet", 2), ("csv", 4)]:
+        SQ._stage(spark, sf_dir, fmt, n)
+
+
+_STREAMING = ("stream", "sink", "source")
+
+#: Shared memoized fixtures, one (label, query-name prefixes, stage)
+#: group each. They are SETUP by policy, never part of a timed span:
+#: each first consumer would otherwise pay the whole one-time build
+#: (e.g. ~2.8s of the 5.4s join_dpp_pruned recorded in BENCH_r05 was
+#: staging; the first r15 window re-paid the 12.5s interval-join
+#: drain inside one retimed row). The bench stages every group before
+#: the first pass (narrated) and again before the retime pass, which
+#: clears the staging memos; scripts/opt_plans.py and
+#: scripts/scale_ladder.py stage only the groups whose prefixes start
+#: one of their query names. A group labelled None is staged without
+#: a timing line.
+SHARED_FIXTURES = [
+    # streaming fixture inputs: stream_* rows time the operators
+    (None, _STREAMING, _stage_streaming),
+    # the interval-join trio reads ONE shared full-outer drain
+    # (VERDICT r8 item 4): each cell times its filter over it
+    ("shared interval-join matrix drain", _STREAMING,
+     _counted(SQ._interval_join_matrix)),
+    # the custom-source queries' staged JSONL ledger
+    (None, _STREAMING, _called(AQ.stage_jsonl)),
+    # the partitioned events layout and the DPP dim fixture
+    (None, ("scan", "join"),
+     _called(AQ._staged_partitioned, AQ._dpp_dim_path)),
+    # the MinHash pair memo shared by dedup_minhash_lsh,
+    # dedup_cluster_components and dedup_lsh_recall_eval
+    # (recorded in docs/PERF_r07.md)
+    ("shared minhash pair memo", ("dedup", "decontam"),
+     _counted(DQ._minhash_pairs)),
+    # round-9 (VERDICT r8 item 6): the rest of the dedup memo set
+    # (exact-gram truth side, LSH component labels, jaccard pairs)
+    ("shared doc-gram + LSH-component + jaccard-pair memos",
+     ("dedup", "decontam"),
+     _counted(DQ._doc_grams, DQ._lsh_components, DQ._jaccard_pairs)),
+    # round-7 shared artifacts: the substring span table and the
+    # learned BPE merge table
+    ("shared substring span memo", ("dedup", "decontam"),
+     _counted(DQ._span_table)),
+    ("shared BPE fit memo", ("text",), _called(TXQ._learn_merges)),
+    # round-8/9 shared graph artifacts (VERDICT r7 item 4): edge
+    # table, degree map, degree-oriented edges, out-adjacency
+    ("shared graph memos", ("graph", "basket"), _counted(
+        GQ._copurchase_edges, GQ._copurchase_degrees,
+        GQ._copurchase_oriented, GQ._copurchase_out_adjacency,
+    )),
+    # round-9 ANN index memos (~10s index fit otherwise paid by
+    # whichever embed_ query the sweep visits first)
+    ("shared ANN index memos (IVF + IVF-PQ fit)", ("embed", "ann"),
+     _called(
+         SIMQ.ivf_index, SIMQ.pq_index_expr, SIMQ.ivfpq_index_expr,
+         SIMQ.ivf_append_index,
+     )),
+    # the media fixture also entropy-encodes a baseline JPEG per
+    # doc (round-8 codec), which the first decode consumer paid
+    ("shared media fixture (PNG/BMP/JPEG/WAV encode)",
+     ("multimodal", "pipeline"), _called(MMQ._stage_media)),
+]
+
+
+def prestage_shared(
+    spark, sf_dir: str, names: list[str] | None = None, narrate: bool = False
+) -> None:
+    """Stage the SHARED_FIXTURES groups: all of them, or with
+    ``names`` only those whose prefixes match a name's first
+    ``_``-separated word. ``narrate`` prints one timing line per
+    labelled group to stderr."""
+    words = None if names is None else {n.split("_")[0] for n in names}
+    for label, prefixes, stage in SHARED_FIXTURES:
+        if words is not None and words.isdisjoint(prefixes):
+            continue
+        t0 = time.perf_counter()
+        stage(spark, sf_dir)
+        if narrate and label:
+            print(f"# {label}: {time.perf_counter() - t0:.3f}s", file=sys.stderr)
+
+
 def _timed(fn) -> float:
     t0 = time.perf_counter()
     fn()
@@ -422,91 +525,8 @@ def main() -> None:
             "min(start, mid) (steady state)",
             file=sys.stderr,
         )
-    # Shared memoized fixtures are SETUP by policy, never part of a
-    # timed span: each first consumer would otherwise pay the whole
-    # one-time build (e.g. ~2.8s of the 5.4s join_dpp_pruned recorded
-    # in BENCH_r05 was staging; the first r15 window re-paid the 12.5s
-    # interval-join drain inside one retimed row). One list, staged
-    # before the first pass (narrated) and again before the retime
-    # pass, which clears the staging memos. A group labelled None is
-    # staged without a timing line.
-    from etl_jobs_spark.queries import analytics_ext as AQ
-    from etl_jobs_spark.queries import dedup as DQ
-    from etl_jobs_spark.queries import graph_analytics as GQ
-    from etl_jobs_spark.queries import multimodal as MMQ
-    from etl_jobs_spark.queries import similarity as SIMQ
-    from etl_jobs_spark.queries import streaming as SQ
-    from etl_jobs_spark.queries import text_analysis as TXQ
-
-    def _called(*builders, count: bool = False):
-        def stage():
-            for build in builders:
-                out = build(spark, sf_dir)
-                if count:
-                    out.count()
-
-        return stage
-
-    def _counted(*builders):
-        return _called(*builders, count=True)
-
-    def _stage_streaming():
-        for fmt, n in [("parquet", 1), ("parquet", 2), ("csv", 4)]:
-            SQ._stage(spark, sf_dir, fmt, n)
-
-    shared_fixtures = [
-        # streaming fixture inputs: stream_* rows time the operators
-        (None, _stage_streaming),
-        # the interval-join trio reads ONE shared full-outer drain
-        # (VERDICT r8 item 4): each cell times its filter over it
-        ("shared interval-join matrix drain",
-         _counted(SQ._interval_join_matrix)),
-        # the custom-source queries' staged JSONL ledger, the
-        # partitioned events layout and the DPP dim fixture
-        (None, _called(
-            AQ.stage_jsonl, AQ._staged_partitioned, AQ._dpp_dim_path
-        )),
-        # the MinHash pair memo shared by dedup_minhash_lsh,
-        # dedup_cluster_components and dedup_lsh_recall_eval
-        # (recorded in docs/PERF_r07.md)
-        ("shared minhash pair memo", _counted(DQ._minhash_pairs)),
-        # round-9 (VERDICT r8 item 6): the rest of the dedup memo set
-        # (exact-gram truth side, LSH component labels, jaccard pairs)
-        ("shared doc-gram + LSH-component + jaccard-pair memos",
-         _counted(DQ._doc_grams, DQ._lsh_components, DQ._jaccard_pairs)),
-        # round-7 shared artifacts: the substring span table and the
-        # learned BPE merge table
-        ("shared substring span memo", _counted(DQ._span_table)),
-        ("shared BPE fit memo", _called(TXQ._learn_merges)),
-        # round-8/9 shared graph artifacts (VERDICT r7 item 4): edge
-        # table, degree map, degree-oriented edges, out-adjacency
-        ("shared graph memos", _counted(
-            GQ._copurchase_edges, GQ._copurchase_degrees,
-            GQ._copurchase_oriented, GQ._copurchase_out_adjacency,
-        )),
-        # round-9 ANN index memos (~10s index fit otherwise paid by
-        # whichever embed_ query the sweep visits first)
-        ("shared ANN index memos (IVF + IVF-PQ fit)", _called(
-            SIMQ.ivf_index, SIMQ.pq_index_expr, SIMQ.ivfpq_index_expr,
-            SIMQ.ivf_append_index,
-        )),
-        # the media fixture also entropy-encodes a baseline JPEG per
-        # doc (round-8 codec), which the first decode consumer paid
-        ("shared media fixture (PNG/BMP/JPEG/WAV encode)",
-         _called(MMQ._stage_media)),
-    ]
-
-    def _prestage_shared(narrate: bool) -> None:
-        for label, stage in shared_fixtures:
-            t0 = time.perf_counter()
-            stage()
-            if narrate and label:
-                print(
-                    f"# {label}: {time.perf_counter() - t0:.3f}s",
-                    file=sys.stderr,
-                )
-
-    _prestage_shared(narrate=True)
+    # shared fixtures are setup, never timed (see SHARED_FIXTURES)
+    prestage_shared(spark, sf_dir, narrate=True)
     # warm the Python DataSource runtime (worker pool + Arrow writer
     # spin-up is a ~6.5s one-time cost in a fresh JVM — VERDICT r4):
     # a 100-row ledger write+read here makes sink_custom_ledger's
@@ -621,7 +641,7 @@ def main() -> None:
         cache.clear_staging_memos()
         cache.release_all()
         t0 = time.perf_counter()
-        _prestage_shared(narrate=False)
+        prestage_shared(spark, sf_dir)
         print(
             f"# retime pass: shared fixtures re-staged in "
             f"{time.perf_counter() - t0:.3f}s",

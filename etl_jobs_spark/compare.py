@@ -1,5 +1,13 @@
-"""Driver-shaped result comparison, shared by tests/conftest.py and
-scripts/sweep_cost.py.
+"""Driver-shaped result comparison and the DuckDB oracle views.
+
+Users: ``tests/conftest.py`` (the ``oracle`` fixture and
+``assert_matches_oracle``), the oracle checker
+``scripts/sweep_cost.py``, the streaming axes
+``scripts/axis_fault.py`` and ``scripts/axis_checkpoint.py``, and
+the shared-session axis ``scripts/axis9_shared_session.py``.
+
+``oracle_views`` opens a DuckDB connection with one view per fixture
+table, so every checker reads a fixture directory the same way.
 
 The driver compares a Spark result against its DuckDB oracle by
 sorting columns by name, sorting rows by all values, then hashing the
@@ -24,8 +32,28 @@ comparing. tests/test_degenerate_inputs.py pins this boundary
 
 from __future__ import annotations
 
+from pathlib import Path
+
+import duckdb
 import numpy as np
 import pandas as pd
+
+from etl_jobs_spark.sources.readers import FIXTURE_TABLES
+
+
+def oracle_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A new DuckDB connection with one view per fixture table under
+    ``sf_dir``. A table staged as a directory of part files (a Spark
+    write, such as a scale-ladder replica) is read through a
+    ``<t>.parquet/*.parquet`` glob; Spark reads either layout
+    natively. DuckDB connections are not thread-safe: open one per
+    thread."""
+    con = duckdb.connect()
+    for t in FIXTURE_TABLES:
+        p = Path(sf_dir) / f"{t}.parquet"
+        src = f"{p}/*.parquet" if p.is_dir() else str(p)
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
+    return con
 
 
 def normalize_frame(df: pd.DataFrame) -> pd.DataFrame:

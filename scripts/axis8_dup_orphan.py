@@ -35,18 +35,18 @@ from __future__ import annotations
 import os
 import shutil
 import sys
+from pathlib import Path
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+
+from etl_jobs_spark.sources.readers import FIXTURE_TABLES  # noqa: E402
+
 SRC = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 DST = "/tmp/etl_jobs_spark_axis8"
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 #: per-table primary key (for the duplicate classes) and the payload
 #: columns a conflicting duplicate rewrites.
@@ -90,7 +90,7 @@ def _pick(n: int, frac: float, salt: int) -> np.ndarray:
 def build(src: str = SRC, dst: str = DST) -> str:
     shutil.rmtree(dst, ignore_errors=True)
     os.makedirs(dst)
-    for t in TABLES:
+    for t in FIXTURE_TABLES:
         tbl = pa.Table.from_pandas(
             pq.read_table(f"{src}/{t}.parquet").to_pandas(),
             preserve_index=False,

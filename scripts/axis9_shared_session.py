@@ -26,18 +26,12 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-import duckdb
-
 from etl_jobs_spark import cache, registry
-from etl_jobs_spark.compare import frames_match
+from etl_jobs_spark.compare import frames_match, oracle_views
 from etl_jobs_spark.session import get_spark
 import etl_jobs_spark.queries  # noqa: F401
 
 DIRS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 #: the queries whose session-global state the axis aims at — every
 #: temp-view site and every memoized shared artifact — plus a broad
@@ -63,12 +57,7 @@ def main() -> int:
         key = f"con_{d.replace('/', '_')}"
         c = getattr(tl, key, None)
         if c is None:  # duckdb connections are not thread-safe
-            c = duckdb.connect()
-            for t in TABLES:
-                c.sql(
-                    f"CREATE VIEW {t} AS SELECT * FROM "
-                    f"'{d}/{t}.parquet'"
-                )
+            c = oracle_views(d)
             setattr(tl, key, c)
         return c
 

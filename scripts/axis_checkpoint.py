@@ -50,16 +50,9 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-import duckdb
-
 from etl_jobs_spark import cache, registry, scratch
-from etl_jobs_spark.compare import frames_match
+from etl_jobs_spark.compare import frames_match, oracle_views
 from etl_jobs_spark.session import get_spark
-
-FIXTURE_TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 EXTRA_STREAMING = {"source_queue", "sink_queue", "sink_custom_ledger_stream"}
 
@@ -111,9 +104,7 @@ def main() -> None:
     root = Path(__file__).resolve().parent.parent / "archive" / "checkpoints" / tag
 
     spark = get_spark("axis-checkpoint", master="local[32]", shuffle_partitions=32)
-    con = duckdb.connect()
-    for t in FIXTURE_TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = oracle_views(sf_dir)
 
     queries = registry.all_queries()
     oracles = registry.all_oracles()

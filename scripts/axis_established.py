@@ -23,17 +23,18 @@ from __future__ import annotations
 import os
 import shutil
 import sys
+from pathlib import Path
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+
+from etl_jobs_spark.sources.readers import FIXTURE_TABLES  # noqa: E402
+
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 #: 5%-NULL injection targets (nullable business columns only — keys
 #: stay intact; the dup/orphan axis owns key mutations).
@@ -55,7 +56,7 @@ ADV = [
 def build_shuffled(dst: str = "/tmp/axis_shuffled") -> str:
     shutil.rmtree(dst, ignore_errors=True)
     rng = np.random.default_rng(0x5EED)
-    for t in TABLES:
+    for t in FIXTURE_TABLES:
         tab = pq.read_table(f"{SF}/{t}.parquet")
         n = tab.num_rows
         tab = tab.take(pa.array(rng.permutation(n)))
@@ -75,7 +76,7 @@ def build_nulled(dst: str = "/tmp/axis_nulled") -> str:
     shutil.rmtree(dst, ignore_errors=True)
     os.makedirs(dst)
     rng = np.random.default_rng(77)
-    for t in TABLES:
+    for t in FIXTURE_TABLES:
         tab = pq.read_table(f"{SF}/{t}.parquet")
         for col in NULLABLE.get(t, []):
             mask = pa.array(rng.random(tab.num_rows) < 0.05)
@@ -95,7 +96,7 @@ def build_unicode(dst: str = "/tmp/axis_unicode") -> str:
     shutil.rmtree(dst, ignore_errors=True)
     os.makedirs(dst)
     rng = np.random.default_rng(0x0C0DE)
-    for t in TABLES:
+    for t in FIXTURE_TABLES:
         tab = pq.read_table(f"{SF}/{t}.parquet")
         if t == "documents":
             texts = tab["text"].to_pylist()

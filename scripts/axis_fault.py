@@ -37,17 +37,10 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-import duckdb
-
 from etl_jobs_spark import cache, registry
-from etl_jobs_spark.compare import frames_match
+from etl_jobs_spark.compare import frames_match, oracle_views
 from etl_jobs_spark.session import get_spark
 from etl_jobs_spark.streaming import pipelines as P
-
-FIXTURE_TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 #: Streaming rows beyond the stream_ prefix: the 2025-era queue pair
 #: and the custom Python DataSource stream sink.
@@ -89,9 +82,7 @@ LATE_EMISSION_OK = {"stream_watermark_append"}
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     spark = get_spark("axis-fault", master="local[32]", shuffle_partitions=32)
-    con = duckdb.connect()
-    for t in FIXTURE_TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = oracle_views(sf_dir)
 
     queries = registry.all_queries()
     oracles = registry.all_oracles()

@@ -8,8 +8,10 @@ output — guide §1.4) and record the global job-counter delta.
 Usage:
   python scripts/opt_plans.py <outdir> <suffix> <sf_dir> name [name...]
 
-Shared memoized fixtures are pre-staged exactly like bench.py so the
-numbers isolate the operator, not one-time staging.
+The shared memoized fixtures the named queries read are pre-staged
+from bench.py's list, so the numbers isolate the operator, not
+one-time staging. ``noop_runs`` is the timing loop
+scripts/scale_ladder.py shares.
 """
 
 from __future__ import annotations
@@ -22,58 +24,32 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
 
+from bench import prestage_shared  # noqa: E402
 from etl_jobs_spark import cache, registry  # noqa: E402
 from etl_jobs_spark.session import get_spark  # noqa: E402
 
 
-def prestage(spark, sf_dir: str, names: list[str]) -> None:
-    """Stage the shared memos the requested queries touch (same
-    policy as bench.py's pre-stage block; lazily scoped by prefix so
-    a two-query invocation doesn't pay every family's fit)."""
-    pref = {n.split("_")[0] for n in names}
-    if pref & {"stream", "sink", "source"}:
-        from etl_jobs_spark.queries import analytics_ext as AQ
-        from etl_jobs_spark.queries import streaming as SQ
+def total_jobs(spark) -> int:
+    """The driver's global DAGScheduler job counter."""
+    return int(spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs())
 
-        for fmt, n in [("parquet", 1), ("parquet", 2), ("csv", 4)]:
-            SQ._stage(spark, sf_dir, fmt, n)
-        SQ._interval_join_matrix(spark, sf_dir).count()
-        AQ.stage_jsonl(spark, sf_dir)
-    if pref & {"scan", "join"}:
-        from etl_jobs_spark.queries import analytics_ext as AQ
 
-        AQ._staged_partitioned(spark, sf_dir)
-        AQ._dpp_dim_path(spark, sf_dir)
-    if pref & {"dedup", "decontam"}:
-        from etl_jobs_spark.queries import dedup as DQ
-
-        DQ._minhash_pairs(spark, sf_dir).count()
-        DQ._doc_grams(spark, sf_dir).count()
-        DQ._lsh_components(spark, sf_dir).count()
-        DQ._jaccard_pairs(spark, sf_dir).count()
-        DQ._span_table(spark, sf_dir).count()
-    if pref & {"text"}:
-        from etl_jobs_spark.queries import text_analysis as TXQ
-
-        TXQ._learn_merges(spark, sf_dir)
-    if pref & {"graph", "basket"}:
-        from etl_jobs_spark.queries import graph_analytics as GQ
-
-        GQ._copurchase_edges(spark, sf_dir).count()
-        GQ._copurchase_degrees(spark, sf_dir).count()
-        GQ._copurchase_oriented(spark, sf_dir).count()
-        GQ._copurchase_out_adjacency(spark, sf_dir).count()
-    if pref & {"embed", "ann"}:
-        from etl_jobs_spark.queries import similarity as SIMQ
-
-        SIMQ.ivf_index(spark, sf_dir)
-        SIMQ.pq_index_expr(spark, sf_dir)
-        SIMQ.ivfpq_index_expr(spark, sf_dir)
-        SIMQ.ivf_append_index(spark, sf_dir)
-    if pref & {"multimodal", "pipeline"}:
-        from etl_jobs_spark.queries import multimodal as MMQ
-
-        MMQ._stage_media(spark, sf_dir)
+def noop_runs(
+    spark, build, sf_dir: str, n: int = 2
+) -> tuple[list[float], list[int]]:
+    """Build ``build(spark, sf_dir)`` afresh and write it to the noop
+    sink (computes every column, discards the output) ``n`` times.
+    Persists are released before each run and after the last. Returns
+    the seconds and the job-counter delta of each run."""
+    secs, jobs = [], []
+    for _ in range(n):
+        cache.release_all()
+        j0, t0 = total_jobs(spark), time.perf_counter()
+        build(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        secs.append(round(time.perf_counter() - t0, 3))
+        jobs.append(total_jobs(spark) - j0)
+    cache.release_all()
+    return secs, jobs
 
 
 def main() -> None:
@@ -86,10 +62,7 @@ def main() -> None:
     queries = registry.all_queries()
     # warmup
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
-    prestage(spark, sf_dir, names)
-
-    def total_jobs() -> int:
-        return int(sc._jsc.sc().dagScheduler().numTotalJobs())
+    prestage_shared(spark, sf_dir, names)
 
     results = {}
     for name in names:
@@ -99,26 +72,15 @@ def main() -> None:
         sc.setJobDescription(f"opt:{name}")
         # plan capture — built fresh so iterative queries' eager
         # actions (checkpoints/collects) run exactly once per build
-        j0, t0 = total_jobs(), time.perf_counter()
+        j0, t0 = total_jobs(spark), time.perf_counter()
         df = queries[name](spark, sf_dir)
         build_s = time.perf_counter() - t0
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        build_jobs = total_jobs() - j0
+        build_jobs = total_jobs(spark) - j0
         (out / f"{name}_{suffix}.txt").write_text(plan)
-        # noop-sink timing (two runs; min): computation only
-        runs = []
-        jobs_runs = []
-        for _ in range(2):
-            cache.release_all()
-            jj0 = total_jobs()
-            tt0 = time.perf_counter()
-            df2 = queries[name](spark, sf_dir)
-            df2.write.format("noop").mode("overwrite").save()
-            runs.append(round(time.perf_counter() - tt0, 3))
-            jobs_runs.append(total_jobs() - jj0)
-        cache.release_all()
+        runs, jobs_runs = noop_runs(spark, queries[name], sf_dir)
         results[name] = {
             "build_s": round(build_s, 3),
             "build_jobs": build_jobs,

@@ -1,15 +1,23 @@
-"""Per-query correctness-check cost telemetry.
+"""The oracle checker: per-query correctness check and its cost.
 
 Runs the driver-shaped check (Spark query + DuckDB oracle +
-order-insensitive VALUE compare via etl_jobs_spark.compare) for EVERY
-registered query at the driver's scale (sf0.01 by default) and records
-per-query wall time to ``docs/SWEEP_COST.json``, ranked most-expensive
-first. ``ok: true`` means row count + schema + values all matched the
-oracle (rows-only queries: ran and returned a stable schema). The
-goal: prove the full registry sweep fits in one round's budget, and
-point at the queries worth trimming if it doesn't.
+order-insensitive VALUE compare via etl_jobs_spark.compare) for
+registered queries and times each one. ``ok: true`` means row count
++ schema + values all matched the oracle (rows-only queries: ran and
+returned a stable schema).
 
 Usage: python scripts/sweep_cost.py [sf_dir] [--tier=fast|heavy|full]
+       python scripts/sweep_cost.py <sf_dir> name [name...]
+
+With query names it checks only those queries, writes no record, and
+exits 1 on any mismatch: the per-change correctness gate, run at
+several scale factors without paying the full sweep each time.
+
+Without names it sweeps the registry at the driver's scale (sf0.01 by
+default) and records per-query wall time to ``docs/SWEEP_COST.json``,
+ranked most-expensive first. The goal: prove the full registry sweep
+fits in one round's budget, and point at the queries worth trimming
+if it doesn't.
 
 Tiering policy (VERDICT r6 item 7): the full-registry sweep passed
 197 s at sf0.01 in round 6 and grows with the registry. The heavy
@@ -23,7 +31,8 @@ registry driver-grade green on a single JVM. Membership rule: a
 query joins HEAVY_TIER when its sweep cost exceeds ~4 s at sf0.01
 AND the cost is runtime fixed cost (state store, Python worker
 spin-up), not operator work — data-bound queries stay in the fast
-tier so regressions in them surface every wave.
+tier so regressions in them surface every wave. ``--tier`` applies
+to the sweep only; named queries always run.
 """
 
 from __future__ import annotations
@@ -33,18 +42,12 @@ import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
-import duckdb
-
-from etl_jobs_spark import cache, registry
-from etl_jobs_spark.compare import frames_match
-from etl_jobs_spark.session import get_spark
-
-FIXTURE_TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from etl_jobs_spark import cache, registry  # noqa: E402
+from etl_jobs_spark.compare import frames_match, oracle_views  # noqa: E402
+from etl_jobs_spark.session import get_spark  # noqa: E402
 
 #: Fixed-runtime-cost queries (state-store spin-up, Python
 #: DataSource worker launch) — rotated via --tier=heavy; see the
@@ -71,19 +74,15 @@ def main() -> None:
         print(f"unknown tier {tier!r} (fast|heavy|full)", file=sys.stderr)
         sys.exit(2)
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
-    spark = get_spark("sweep-cost", master="local[32]", shuffle_partitions=32)
-    con = duckdb.connect()
-    for t in FIXTURE_TABLES:
-        # a table staged as a DIRECTORY of part files (the shuffle
-        # axis's multi-part layout) needs a glob for DuckDB; Spark
-        # reads either layout natively
-        p = f"{sf_dir}/{t}.parquet"
-        src = f"{p}/*.parquet" if Path(p).is_dir() else p
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
+    names = args[1:]
+    spark = get_spark("sweep-cost")
+    con = oracle_views(sf_dir)
 
     queries = registry.all_queries()
     oracles = registry.all_oracles()
-    if tier == "fast":
+    if names:
+        queries = {n: queries.get(n) for n in names}
+    elif tier == "fast":
         queries = {k: v for k, v in queries.items() if k not in HEAVY_TIER}
     elif tier == "heavy":
         queries = {k: v for k, v in queries.items() if k in HEAVY_TIER}
@@ -95,6 +94,8 @@ def main() -> None:
         ok = True
         err = None
         try:
+            if fn is None:
+                raise KeyError(f"unknown query {name}")
             got = fn(spark, sf_dir).toPandas()
             n = len(got)
             if name in oracles:
@@ -111,7 +112,18 @@ def main() -> None:
             "ok": ok,
             **({"error": err} if err else {}),
         }
-        print(f"# {name}: {rows[name]['sec']:.2f}s", file=sys.stderr)
+        status = "ok" if ok else f"FAIL {err}"
+        oracled = "" if name in oracles else ", no oracle"
+        print(
+            f"# {name}: {rows[name]['sec']:.2f}s {status} ({n} rows{oracled})",
+            file=sys.stderr,
+        )
+    spark.stop()
+
+    if names:
+        failed = [k for k, r in rows.items() if not r["ok"]]
+        print(f"FAILED: {failed}" if failed else f"ALL {len(rows)} MATCH")
+        sys.exit(1 if failed else 0)
 
     ranked = dict(sorted(rows.items(), key=lambda kv: -kv[1]["sec"]))
     out = {
@@ -121,8 +133,6 @@ def main() -> None:
         "n_queries": len(rows),
         "queries": ranked,
     }
-    # only the full sweep owns the canonical record; tiered runs
-    # write alongside it
     # canonical unsuffixed record = full tier at the driver's sf0.01;
     # any other (sf, tier) writes alongside it (a full sf0.1 sweep
     # once clobbered the committed sf0.01 record)
@@ -130,11 +140,10 @@ def main() -> None:
     sf_name = Path(sf_dir).name
     if sf_name != "sf0.01":
         suffix = f"_{sf_name}{suffix}"
-    Path(f"docs/SWEEP_COST{suffix}.json").write_text(
+    (REPO / "docs" / f"SWEEP_COST{suffix}.json").write_text(
         json.dumps(out, indent=1)
     )
     print(json.dumps({k: out[k] for k in ("total_sec", "n_queries")}))
-    spark.stop()
 
 
 if __name__ == "__main__":

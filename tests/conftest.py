@@ -9,7 +9,6 @@ import os
 import sys
 from pathlib import Path
 
-import duckdb
 import pytest
 
 REPO = Path(__file__).resolve().parents[1]
@@ -17,7 +16,8 @@ sys.path.insert(0, str(REPO))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
-from etl_jobs_spark.sources.readers import FIXTURE_TABLES  # noqa: E402
+from etl_jobs_spark.compare import frames_match, normalize_frame, oracle_views  # noqa: E402
+from etl_jobs_spark.sources.readers import FIXTURE_TABLES  # noqa: E402,F401
 
 
 @pytest.fixture(scope="session")
@@ -36,16 +36,10 @@ def spark():
 
 @pytest.fixture(scope="session")
 def oracle():
-    con = duckdb.connect()
-    for t in FIXTURE_TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
-        )
+    con = oracle_views(SF_DIR)
     yield con
     con.close()
 
-
-from etl_jobs_spark.compare import frames_match, normalize_frame  # noqa: E402
 
 _normalize = normalize_frame  # back-compat alias for older tests
 

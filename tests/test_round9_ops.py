@@ -1395,46 +1395,6 @@ def test_mann_kendall_matches_python(spark):
     assert got["z"] == pytest.approx(z, abs=1e-6)
 
 
-# ---------------------------------------------------------------------------
-# Negative controls: the comparison gate must actually FAIL on the
-# mismatch classes it claims to catch (a gate that can't fail is no
-# evidence).
-# ---------------------------------------------------------------------------
-
-
-def test_frames_match_negative_controls():
-    from etl_jobs_spark.compare import frames_match
-
-    base = pd.DataFrame({"k": [1, 2, 3], "v": [10, 20, 30]})
-    frames_match(base.copy(), base.copy())  # sanity: identical passes
-    # (a) one value off by one
-    off = base.copy()
-    off.loc[1, "v"] = 21
-    with pytest.raises(AssertionError):
-        frames_match(off, base.copy())
-    # (b) dropped row
-    with pytest.raises(AssertionError):
-        frames_match(base.iloc[:2].copy(), base.copy())
-    # (c) renamed column
-    with pytest.raises(AssertionError):
-        frames_match(base.rename(columns={"v": "val"}), base.copy())
-    # (d) NULL vs value
-    nulled = base.astype({"v": "float64"})
-    nulled.loc[2, "v"] = float("nan")
-    with pytest.raises(AssertionError):
-        frames_match(nulled, base.astype({"v": "float64"}))
-    # (e) row-order permutation must PASS (order-insensitive compare)
-    frames_match(
-        base.iloc[::-1].reset_index(drop=True), base.copy()
-    )
-    # (f) float within rtol passes, outside fails
-    f1 = pd.DataFrame({"x": [1.0000001]})
-    f2 = pd.DataFrame({"x": [1.0]})
-    frames_match(f1, f2, float_rtol=1e-6)
-    with pytest.raises(AssertionError):
-        frames_match(f1, f2)
-
-
 def test_lorenz_deciles_match_python(spark):
     from etl_jobs_spark.queries.product_analytics import (
         agg_lorenz_deciles,
