@@ -864,43 +864,60 @@ def window_share_of_total(spark, sf_dir):
     """,
 )
 def recursive_cte_hierarchy(spark, sf_dir):
-    """RECURSIVE CTE (Spark 4's WITH RECURSIVE — SQL:1999 recursive
-    queries, the last big ANSI surface Spark lacked): every customer
-    walks a synthetic referral hierarchy (parent = custkey DIV 3, a
-    ternary tree rooted at 1) to the root, accumulating depth and
-    the ancestor-chain balance; the result is the per-depth census.
-    The recursion terminates by JOIN failure at the root (parent key
-    0 doesn't exist) — no explicit LIMIT — and each iteration is
-    one equi-join of the frontier against the static dim, which is
-    exactly how the engine executes it (iterative union of
-    frontier joins, the same plan family as the label-propagation
-    fallback in operators/dedup.py). Depth is O(log₃ n), so at
-    100 TB the frontier shrinks geometrically and the recursion is
-    ~a dozen broadcast joins. Oracle: DuckDB's independent native
-    WITH RECURSIVE. Integer cents; both engines' DIV truncate
-    identically."""
+    """Closed-form ancestor walk: every customer walks a synthetic
+    referral hierarchy (parent = custkey DIV 3, a ternary tree rooted
+    at 1) towards the root in one plan, accumulating depth and the
+    ancestor-chain balance in integer cents; the result is the
+    per-depth census. The oracle states it as DuckDB's native WITH
+    RECURSIVE; here the ancestors of key L are exactly L DIV 3^k:
+
+    1. ``p``: one row per key (the NULL key is its own group) with its
+       max non-null cents. Duplicate keys multiply the recursion's
+       paths, and the best path takes the max of every level.
+    2. Each key's chain [L, L DIV 3, ...], continued while the last
+       key is > 1, built by ``aggregate`` (at most 40 steps for a
+       BIGINT key) and ``posexplode``d into (leaf, k, cur).
+    3. One null-safe equi-join of the steps back to ``p``: an
+       ancestor that does not exist drops its step.
+    4. One window per leaf over k keeps the contiguous prefix of
+       existing ancestors (``row_number = k + 1``; the recursion stops
+       at the first missing one) and nulls every prefix sum from the
+       first level whose balances are all NULL.
+    5. Depth and chain balance per leaf, then the census per depth.
+
+    Every recursion level of the native form is a new query execution
+    (analysis, planning and a few jobs each, growing with depth); this
+    form is one plan with a constant job count. Both engines' DIV
+    truncate identically on the positive keys that recurse."""
     from etl_jobs_spark.queries._shared import scoped_view
 
     cust = read_table(spark, sf_dir, "customer")
     v = scoped_view(cust, "rcte_customer", sf_dir)  # axis 9
     return spark.sql(
         f"""
-        WITH RECURSIVE chain AS (
-          SELECT c_custkey AS leaf, c_custkey AS cur,
-                 CAST(0 AS BIGINT) AS depth,
-                 CAST(round(c_acctbal * 100) AS BIGINT) AS chain_cents
-          FROM {v}
-          UNION ALL
-          SELECT ch.leaf, p.c_custkey,
-                 ch.depth + 1,
-                 ch.chain_cents + CAST(round(p.c_acctbal * 100) AS BIGINT)
-          FROM chain ch
-          JOIN {v} p ON p.c_custkey = ch.cur DIV 3
-          WHERE ch.cur > 1),
+        WITH p AS (
+          SELECT c_custkey AS key,
+                 max(CAST(round(c_acctbal * 100) AS BIGINT)) AS cents
+          FROM {v} GROUP BY c_custkey),
+        steps AS (
+          SELECT key AS leaf,
+                 posexplode(aggregate(
+                   sequence(1, 40), array(key),
+                   (acc, i) -> IF(element_at(acc, -1) > 1,
+                                  concat(acc, array(element_at(acc, -1) DIV 3)),
+                                  acc))) AS (k, cur)
+          FROM p),
+        walked AS (
+          SELECT s.leaf, s.k,
+                 row_number() OVER w AS rn,
+                 count(a.cents) OVER w AS n_cents,
+                 sum(a.cents) OVER w AS run_cents
+          FROM steps s JOIN p a ON a.key <=> s.cur
+          WINDOW w AS (PARTITION BY s.leaf ORDER BY s.k)),
         final AS (
-          SELECT leaf, CAST(max(depth) AS BIGINT) AS depth,
-                 CAST(max(chain_cents) AS BIGINT) AS chain_cents
-          FROM chain GROUP BY leaf)
+          SELECT leaf, CAST(max(k) AS BIGINT) AS depth,
+                 max(IF(n_cents = rn, run_cents, NULL)) AS chain_cents
+          FROM walked WHERE rn = k + 1 GROUP BY leaf)
         SELECT depth, CAST(count(*) AS BIGINT) AS n_customers,
                CAST(sum(chain_cents) AS BIGINT) AS total_chain_cents
         FROM final GROUP BY depth

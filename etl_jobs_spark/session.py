@@ -12,8 +12,15 @@ timestamps compare bit-for-bit against external oracles.
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+#: The directory holding the ``etl_jobs_spark`` package. Python workers
+#: (UDFs, the Python DataSource) import the engine's modules to unpickle
+#: their functions, so every session puts it on the workers' path; the
+#: working directory the driver was started from then does not matter.
+PACKAGE_ROOT = str(Path(__file__).resolve().parent.parent)
 
 #: Defaults applied to every session this engine builds. At cluster
 #: scale these are the settings you want on a 1000-executor job too:
@@ -87,6 +94,7 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
         )
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    conf["spark.executorEnv.PYTHONPATH"] = PACKAGE_ROOT
     # Optimization r15: explicit engine-conf overrides from the
     # environment ("k=v;k2=v2") — the deploy-time knob a cluster
     # submit would pass as --conf; also how the optimization rounds

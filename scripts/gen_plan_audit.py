@@ -87,7 +87,7 @@ AUDIT = {
     "dq_order_lineitem_reconcile": "one orderkey rollup + one join; LEFT keeps headless orders",
     "governance_access_report": "cohort broadcasts into LEFT SEMI filters; facts aggregate once by subject",
     "fn_collation_suite": "collation-aware hash join against a 5-row broadcast dim",
-    "recursive_cte_hierarchy": "WITH RECURSIVE as iterative frontier joins; depth O(log n)",
+    "recursive_cte_hierarchy": "closed-form walk: posexplode of each key's DIV-3 chain, one null-safe join, one per-leaf window; no UnionLoop",
     "agg_weighted_median": "one sort-window per group; crossing row via integer cumulative compare",
     "agg_funnel_time_bound": "two user-keyed stages share one shuffle family",
     "embed_sq8_topk": "broadcast probe set; codes computed map-side (no UDF); integer-dot scan stays codegen",

@@ -60,6 +60,7 @@ EMPTY_SAMPLE = [
     "agg_sketch_accuracy_audit",    # standalone hll agg + 0 estimates
     "q1_pricing_summary",           # flagship: plain empty aggregate
     "pipeline_llm_corpus_end_to_end",  # flagship composition
+    "recursive_cte_hierarchy",      # closed-form walk over zero keys
 ]
 
 
@@ -580,6 +581,7 @@ DUP_ORPHAN_SAMPLE = [
     "pack_sequences",          # n_tokens window tie-break
     "multimodal_decode_wav",   # per-distinct-id closed-form oracle
     "stream_dedup_exact",      # full-row exactly-once dedup
+    "recursive_cte_hierarchy", # per-key max over conflicting dups
 ]
 
 
@@ -628,3 +630,45 @@ def test_fit_tier_rejects_duplicate_ids_loudly(spark, dup_orphan_dir):
             con.sql(ORACLES[name]).df()
     with pytest.raises(duckdb.Error, match="unrecognized embeddings"):
         con.sql(ORACLES["embed_ivf_topk"]).df()
+
+
+def test_recursive_cte_hierarchy_edge_keys_match(spark, tmp_path):
+    """The closed-form ancestor walk against the oracle's native
+    recursion on a hand-built customer table: NULL keys, conflicting
+    duplicate keys, negative keys, a missing ancestor (4), a key whose
+    balances are all NULL (7), and one complete 40-step chain from a
+    key >= 2 * 3^39 down through 2 to 0."""
+    import duckdb
+
+    from etl_jobs_spark import cache
+    from etl_jobs_spark.compare import frames_match
+
+    name = "recursive_cte_hierarchy"
+    top = 2 * 3**39 + 17
+    keys = [k for k in range(31) if k != 4]
+    keys += [top // 3**k for k in range(40) if top // 3**k > 30]
+    keys += [500, -1, -7]
+
+    def cents(k):
+        return ((k * 7919) % 20001 - 10000) / 4  # exact 2dp values
+
+    rows = [(k, None if k == 7 else cents(k)) for k in keys]
+    rows += [(None, 10.25), (None, None)]
+    rows += [(10, -3.5), (10, 99.75), (3, None), (2, -0.25)]
+    d = tmp_path / "edge_keys"
+    d.mkdir()
+    pq.write_table(
+        pa.table(
+            {
+                "c_custkey": pa.array([k for k, _ in rows], pa.int64()),
+                "c_acctbal": pa.array([b for _, b in rows], pa.float64()),
+            }
+        ),
+        str(d / "customer.parquet"),
+    )
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW customer AS SELECT * FROM '{d}/customer.parquet'")
+    got = QUERIES[name](spark, str(d)).toPandas()
+    cache.release_all()
+    frames_match(got, con.sql(ORACLES[name]).df())
+    assert got["depth"].max() == 40

@@ -1,6 +1,7 @@
 """Spark-job budgets on the query read path: the schema memo in
-``readers.read_table`` and the literal-array PCA power iteration.
-Jobs are counted per job group through the status tracker."""
+``readers.read_table``, the literal-array PCA power iteration and the
+closed-form ancestor walk. Jobs are counted per job group through the
+status tracker."""
 
 from __future__ import annotations
 
@@ -57,3 +58,43 @@ def test_pca_power_iter_warm_job_budget(spark):
     cache.release_all()
     assert rows
     assert jobs <= 8, jobs
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_recursive_cte_hierarchy_warm_job_budget(spark):
+    """The ancestor walk is one plan: a warm execution stays within 8
+    Spark jobs (the native WITH RECURSIVE form ran one query execution
+    per level, 19 jobs at sf0.001) and runs no UnionLoop."""
+    from etl_jobs_spark import cache
+    from etl_jobs_spark.registry import all_queries
+
+    rcte = all_queries()["recursive_cte_hierarchy"]
+    rcte(spark, SF_DIR).collect()
+    cache.release_all()
+
+    def run():
+        df = rcte(spark, SF_DIR)
+        return df, df.collect()
+
+    (df, rows), jobs = _jobs_in(spark, "rcte_warm", run)
+    plan = _executed_plan(df)
+    cache.release_all()
+    assert rows
+    assert jobs <= 8, jobs
+    assert "UnionLoop" not in plan
+
+
+def test_graph_reachability_sql_keeps_native_recursion(spark):
+    """``graph_reachability_sql`` shares its SQL text with its oracle, so
+    it stays the one native WITH RECURSIVE path."""
+    from etl_jobs_spark import cache
+    from etl_jobs_spark.registry import all_queries
+
+    df = all_queries()["graph_reachability_sql"](spark, SF_DIR)
+    df.collect()
+    plan = _executed_plan(df)
+    cache.release_all()
+    assert "UnionLoop" in plan

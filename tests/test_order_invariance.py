@@ -153,6 +153,7 @@ NULL_SAMPLE = [
     "dedup_incremental_bloom",
     "text_pii_scrub",
     "multimodal_decode_features",
+    "recursive_cte_hierarchy",
 ]
 
 
