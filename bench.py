@@ -17,7 +17,10 @@ every query records its measured layers: jobs, stages, tasks,
 ``driver_ms`` (wall time minus the union of its job intervals),
 ``task_cpu_ms``, shuffle, spill and Python-worker time. Writing the
 log is not free: on the 30 heaviest queries (sf0.1, 4 cores) it added
-4.6% wall time, so walls compare only between event-logged runs.
+4.6% wall time while task-end events repeated their task metrics as
+accumulables. Without those, 3 on/off pairs on a noisy 4-vCPU host
+gave medians of 61.0 s on and 61.2 s off, inside a 50.7-78.3 s spread.
+Walls compare only between event-logged runs.
 
 A full census run writes the whole record to docs/BENCH_FULL_LATEST.json
 (sf0.1; ``BENCH_FULL_<sf dir>.json`` at other scales) and appends it to
@@ -341,6 +344,10 @@ def measure(sf_dir: str, cpus: int, names: list[str]) -> tuple[dict, dict, dict]
                 "spark.eventLog.enabled": "true",
                 "spark.eventLog.compress": "false",
                 "spark.eventLog.dir": log_dir.as_uri(),
+                # task-end events then carry the task metrics once, not
+                # again as internal accumulables; ``perfbench.trace``
+                # reads the metrics block and the Python SQL accumulators
+                "spark.eventLog.includeTaskMetricsAccumulators": "false",
                 # stderr carries the per-query rows, not progress bars
                 "spark.ui.showConsoleProgress": "false",
             },

@@ -22,20 +22,22 @@ Driver-side that is enough; the state-server protocol ALSO runs in
 the Python workers (``StatefulProcessorApiClient`` talks to the JVM
 state store from the worker). Workers are fresh interpreters, so the
 shim must run there before ``pyspark.worker`` unpickles the
-processor: :func:`worker_pythonpath` returns a directory whose
-``sitecustomize.py`` replays steps 2–3 at interpreter start, and
-:func:`enable_tws` splices it into ``sc.environment`` — PySpark
+processor. It does so from the engine's one worker bootstrap,
+``_worker_boot/sitecustomize.py`` (see ``session.WORKER_BOOT``), which
+every interpreter imports at start. It is a ``sitecustomize`` because
+that is the only hook that also runs in workers not forked from the
+daemon. The bootstrap replays steps 2-3 only when
+:func:`enable_tws` has set ``TWS_MARKER`` in ``sc.environment``: PySpark
 captures that dict into every subsequently created python function
-(core/rdd.py ``_prepare_for_python_RDD``) and the worker factory
-merges its ``PYTHONPATH`` into the worker's module path, so this
-works on an already-running session with no conf changes.
+(core/rdd.py ``_prepare_for_python_RDD``) and the worker factory puts
+it in the worker's environment, so this works on an already-running
+session with no conf changes.
 """
 
 from __future__ import annotations
 
 import os
 import sys
-from pathlib import Path
 
 #: Directories that may hold a pure-Python ``google/protobuf``
 #: runtime. Probed in order; first importable wins.
@@ -44,7 +46,8 @@ PB_RUNTIME_CANDIDATES = (
     "/usr/lib/google-cloud-sdk/lib/third_party/cloudsdk",
 )
 
-_BOOTSTRAP_DIR = Path(__file__).resolve().parent / "_pb_bootstrap"
+#: Worker environment entry that tells the bootstrap to replay the shim.
+TWS_MARKER = "ETL_JOBS_SPARK_TWS_SHIM"
 
 _state: dict[str, bool | None] = {"ok": None}
 
@@ -123,24 +126,21 @@ def ensure_protobuf() -> bool:
     return True
 
 
-def worker_pythonpath() -> str:
-    """The bootstrap dir whose ``sitecustomize.py`` replays the shim
-    at worker-interpreter start."""
-    return str(_BOOTSTRAP_DIR)
-
-
 def enable_tws(spark) -> bool:
     """Prepare ``spark`` for transformWithStateInPandas: driver-side
-    shim + worker PYTHONPATH splice. Safe to call repeatedly and on
-    sessions whose JVM is already running (worker env is captured
-    per created python function, not at context start)."""
+    shim, and the marker that makes the worker bootstrap replay it.
+    A session not built by ``get_spark`` (the driver harness's own)
+    lacks the bootstrap on its worker path, so it is prepended there.
+    Safe to call repeatedly and on sessions whose JVM is already
+    running (worker env is captured per created python function, not
+    at context start)."""
+    from etl_jobs_spark.session import WORKER_BOOT
+
     if not ensure_protobuf():
         return False
-    sc = spark.sparkContext
-    existing = sc.environment.get("PYTHONPATH", "")
-    boot = worker_pythonpath()
-    if boot not in existing.split(os.pathsep):
-        sc.environment["PYTHONPATH"] = (
-            boot + ((os.pathsep + existing) if existing else "")
-        )
+    env = spark.sparkContext.environment
+    existing = env.get("PYTHONPATH", "")
+    if WORKER_BOOT not in existing.split(os.pathsep):
+        env["PYTHONPATH"] = WORKER_BOOT + ((os.pathsep + existing) if existing else "")
+    env[TWS_MARKER] = "1"
     return True

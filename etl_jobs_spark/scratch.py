@@ -9,11 +9,17 @@ query. Prefer a RAM-backed tmpfs (/dev/shm) when one exists; honor
 This is local-harness plumbing, not engine design: on a real cluster
 checkpoints belong on the shared store (S3/HDFS) and the trade-off is
 durability, which a drain-and-stop correctness run doesn't need.
+
+A RAM-backed root is memory, so the unpinned dirs a process was handed
+are removed when its interpreter exits; pinned ones (``pinned_scratch``)
+stay for the restart run that reads them.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 import uuid
 from pathlib import Path
@@ -48,17 +54,30 @@ def scratch_root() -> Path:
 _PIN: dict | None = None
 
 
+#: Unpinned paths ``scratch_dir`` handed out in this process.
+_ALLOCATED: list[Path] = []
+
+
+@atexit.register
+def _remove_allocated() -> None:
+    for path in _ALLOCATED:
+        shutil.rmtree(path, ignore_errors=True)
+
+
 def scratch_dir(prefix: str) -> Path:
-    """A fresh, unique (not yet created) scratch path — unless
-    pinned (see ``pinned_scratch``), in which case the path is the
-    deterministic ``<root>/<prefix>`` (``_2``, ``_3``… on repeated
-    requests for the same prefix within one pin scope)."""
+    """A fresh, unique (not yet created) scratch path, removed at
+    interpreter exit — unless pinned (see ``pinned_scratch``), in
+    which case the path is the deterministic ``<root>/<prefix>``
+    (``_2``, ``_3``… on repeated requests for the same prefix within
+    one pin scope) and is kept."""
     if _PIN is not None:
         n = _PIN["counts"].get(prefix, 0) + 1
         _PIN["counts"][prefix] = n
         name = prefix if n == 1 else f"{prefix}_{n}"
         return _PIN["root"] / name
-    return scratch_root() / f"{prefix}_{uuid.uuid4().hex[:8]}"
+    path = scratch_root() / f"{prefix}_{uuid.uuid4().hex[:8]}"
+    _ALLOCATED.append(path)
+    return path
 
 
 def stage_atomic(final: Path, build) -> None:
@@ -83,8 +102,6 @@ def stage_atomic(final: Path, build) -> None:
     against them). A leftover temp dir from a crashed stager is
     discarded — its creator, by existing, proved it never renamed.
     """
-    import shutil
-
     if final.exists():
         return
     tmp = final.with_name(f".{final.name}.__staging")

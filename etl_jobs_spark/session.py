@@ -22,6 +22,15 @@ from pyspark.sql import SparkSession
 #: working directory the driver was started from then does not matter.
 PACKAGE_ROOT = str(Path(__file__).resolve().parent.parent)
 
+#: The one Python-worker bootstrap: its ``sitecustomize.py`` runs at every
+#: worker interpreter's start, and it goes first on the workers' path so
+#: no other ``sitecustomize`` shadows it. It must be a ``sitecustomize``:
+#: the Python DataSource planner runners are fresh interpreters, not
+#: forks of ``spark.python.daemon.module``. See the module's docstring
+#: for what it does (skip unchanged zip-archive rescans, replay the
+#: transformWithState protobuf shim).
+WORKER_BOOT = str(Path(__file__).resolve().parent / "_worker_boot")
+
 #: Defaults applied to every session this engine builds. At cluster
 #: scale these are the settings you want on a 1000-executor job too:
 #: AQE re-plans shuffles from runtime statistics (coalesces small
@@ -94,7 +103,7 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
         )
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    conf["spark.executorEnv.PYTHONPATH"] = PACKAGE_ROOT
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join((WORKER_BOOT, PACKAGE_ROOT))
     # Optimization r15: explicit engine-conf overrides from the
     # environment ("k=v;k2=v2") — the deploy-time knob a cluster
     # submit would pass as --conf; also how the optimization rounds

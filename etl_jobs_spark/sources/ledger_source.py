@@ -298,9 +298,15 @@ class LedgerStreamReader(SimpleDataSourceStreamReader):
                             rec.get("value"),
                         )
 
+    @staticmethod
+    def _new_files(names, start):
+        """``names`` minus the files ``start`` already consumed, in order."""
+        seen = set(start["files"])
+        return [n for n in names if n not in seen]
+
     def read(self, start):
         names = self._names()
-        new = [n for n in names if n not in set(start["files"])]
+        new = self._new_files(names, start)
         # Materialized (the simple-reader protocol prefetches rows
         # into the driver-side cache; fine for a per-trigger file
         # increment — a corpus-sized stream belongs on the
@@ -316,8 +322,7 @@ class LedgerStreamReader(SimpleDataSourceStreamReader):
         return iter(list(self._rows(new))), {"files": names}
 
     def readBetweenOffsets(self, start, end):
-        new = [n for n in end["files"] if n not in set(start["files"])]
-        return list(self._rows(new))
+        return list(self._rows(self._new_files(end["files"], start)))
 
     def commit(self, end):  # ledger files are immutable; nothing to ack
         pass

@@ -156,6 +156,35 @@ def test_stream_reader_offsets_and_replay(tmp_path):
     assert sorted(row[0] for row in replay) == [1, 2]
 
 
+@pytest.mark.parametrize(
+    "start_files, end_files",
+    [
+        (["a.json", "c.json", "gone.json"], ["a.json", "b.json", "c.json", "d.json"]),
+        (["x.json", "y.json"], ["a.json", "b.json", "c.json", "d.json"]),
+    ],
+    ids=["overlapping", "disjoint"],
+)
+def test_stream_reader_new_files_per_offset(tmp_path, start_files, end_files):
+    """Both offset diffs read exactly the files of the later offset that
+    the earlier one lacks, in file order."""
+    from etl_jobs_spark.sources.ledger_source import LedgerStreamReader
+
+    _write_ledger(
+        tmp_path,
+        {
+            name: [{"event_id": i, "user_id": i, "event_type": "x", "value": 1.0}]
+            for i, name in enumerate(end_files)
+        },
+    )
+    want = [i for i, name in enumerate(end_files) if name not in start_files]
+    r = LedgerStreamReader({"path": str(tmp_path)})
+    rows, off = r.read({"files": start_files})
+    assert [row[0] for row in rows] == want
+    assert off == {"files": end_files}
+    start, end = {"files": start_files}, {"files": end_files}
+    assert [row[0] for row in r.readBetweenOffsets(start, end)] == want
+
+
 def test_batch_to_jsonl_byte_identical_to_json_dumps():
     """The r16 columnar serializer must produce byte-identical JSONL
     to the old per-row json.dumps loop for the ledger schema,

@@ -1,11 +1,14 @@
 """stage_atomic: all-or-nothing staging for exists-guarded fixture
 dirs (ADVICE r14, streaming.py:908 — a crash between a feed write
 and its marker appends left a dir the pinned-scratch restart treated
-as fully staged)."""
+as fully staged), and the exit cleanup of unpinned scratch dirs."""
 
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
+from pathlib import Path
 
 import pytest
 
@@ -62,3 +65,39 @@ def test_crashed_partial_staging_is_discarded(tmp_path):
     stage_atomic(final, build)
     assert sorted(os.listdir(final)) == ["a", "marker"]
     assert (final / "a").read_text() == "full"
+
+
+_ALLOCATE_AND_EXIT = """
+import sys
+from etl_jobs_spark import scratch
+d = scratch.scratch_dir("exit_probe")
+(d / "sub").mkdir(parents=True)
+(d / "sub" / "f").write_text("x")
+with scratch.pinned_scratch(sys.argv[1]):
+    p = scratch.scratch_dir("pinned_probe")
+p.mkdir(parents=True)
+(p / "f").write_text("y")
+print(d)
+"""
+
+
+def test_unpinned_scratch_removed_at_exit_pinned_kept(tmp_path):
+    root = tmp_path / "root"
+    pinned = tmp_path / "pinned"
+    root.mkdir()
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_SCRATCH=str(root),
+        PYTHONPATH=str(Path(__file__).resolve().parents[1]),
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", _ALLOCATE_AND_EXIT, str(pinned)],
+        env=env,
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    allocated = Path(out.stdout.strip())
+    assert allocated.parent == root
+    assert os.listdir(root) == []
+    assert (pinned / "pinned_probe" / "f").read_text() == "y"
