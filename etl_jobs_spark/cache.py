@@ -63,20 +63,18 @@ def release_all() -> None:
 
 
 def clear_staging_memos() -> None:
-    """Forget every staged-fixture memo so the next invocation of a
-    staging query re-stages from scratch (fresh uuid dirs).
+    """Forget every staged fixture so the next call of a staging
+    helper re-stages it from scratch (fresh uuid dirs). Every staged
+    fixture is memoized in the one ``_shared.session_memo`` store, so
+    this clears one dict and cannot miss a fixture.
 
     Two consumers: the checkpoint axis (each archive must be
     self-contained, scripts/axis_checkpoint.py) and the bench's
-    retime pass (VERDICT r14 item 5 — the second timing run must pay
-    the SAME staging cost as the first, or min-of-2 would silently
-    switch streaming rows to a staged-reuse basis prior rounds never
-    measured)."""
-    from etl_jobs_spark.queries import _shared, analytics_ext, multimodal
-    from etl_jobs_spark.queries import streaming as SQ
+    second pass, which must pay the SAME staging cost as the first:
+    a fixture one pass re-staged and the other reused would time
+    one row on two bases, and min-of-2 would keep the cheaper one.
+    Fixtures that are setup by policy are re-staged before each pass
+    (``bench.SHARED_FIXTURES``)."""
+    from etl_jobs_spark.queries import _shared
 
-    SQ._STAGED.clear()
-    analytics_ext._SDEDUP_MEMO.clear()
-    analytics_ext._JSONL_MEMO.clear()
-    multimodal._MEDIA_STAGED.clear()
     _shared._SESSION_MEMOS.clear()

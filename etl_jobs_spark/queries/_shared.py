@@ -62,9 +62,11 @@ def _dirty_rules() -> list[V.Rule]:
 
 
 #: Session-scoped artifact memos (staged layouts, fitted indexes,
-#: bucketed tables). Keyed by applicationId, NEVER id(spark): a
-#: stopped session's id() can be recycled and must not serve a new
-#: session artifacts bound to the dead one.
+#: bucketed tables), the ONE store for them, so
+#: ``cache.clear_staging_memos`` forgets them all. Keyed by
+#: applicationId, NEVER id(spark): a stopped session's id() can be
+#: recycled and must not serve a new session artifacts bound to the
+#: dead one.
 _SESSION_MEMOS: dict[str, dict] = {}
 
 

@@ -11,7 +11,9 @@ from __future__ import annotations
 from pathlib import Path
 
 from etl_jobs_spark.operators import multimodal as MM
+from etl_jobs_spark.queries._shared import session_memo
 from etl_jobs_spark.registry import register
+from etl_jobs_spark.scratch import scratch_dir, stage_atomic
 from etl_jobs_spark.sources.readers import read_table, spread
 
 
@@ -104,9 +106,6 @@ def multimodal_audio_chunks(spark, sf_dir):
 # (integer-only), so an encoder OR decoder bug breaks the hash match.
 # ---------------------------------------------------------------------------
 
-_MEDIA_STAGED: dict[str, str] = {}
-
-
 def _stage_media(spark, sf_dir: str) -> str:
     """Encode + stage the real-container media table once per sf_dir
     (memoized): doc_id, container, media(binary), audio(binary).
@@ -119,11 +118,6 @@ def _stage_media(spark, sf_dir: str) -> str:
     is keyed per doc_id. The grid is a pure function of doc_id, so
     the distinct is exact, deterministic, and all the generator
     needs."""
-    if sf_dir in _MEDIA_STAGED:
-        return _MEDIA_STAGED[sf_dir]
-    from etl_jobs_spark.scratch import scratch_dir, stage_atomic
-
-    d = scratch_dir("etl_media")
 
     def _build(tmp):
         docs = read_table(spark, sf_dir, "documents")
@@ -134,9 +128,12 @@ def _stage_media(spark, sf_dir: str) -> str:
             docs.select("doc_id").distinct()
         ).repartition(2).write.parquet(str(tmp))
 
-    stage_atomic(d, _build)  # crash-safe pinned-scratch restart reuse
-    _MEDIA_STAGED[sf_dir] = str(d)
-    return str(d)
+    return session_memo(  # crash-safe pinned-scratch restart reuse
+        spark,
+        "media",
+        sf_dir,
+        lambda: str(stage_atomic(scratch_dir("etl_media"), _build)),
+    )
 
 
 #: SQL fragments for the fixture grid (shared constants with
@@ -402,21 +399,13 @@ def stream_media_decode(spark, sf_dir):
     )
 
 
-_GIF_STAGED: dict[str, str] = {}
-
-
 def _stage_media_gif(spark, sf_dir: str) -> str:
     """Encode + stage the GIF face of the media table once per
     sf_dir (memoized): the same fixture grids as _stage_media, in a
     palette-indexed LZW container instead of PNG/BMP."""
-    if sf_dir in _GIF_STAGED:
-        return _GIF_STAGED[sf_dir]
     import pandas as pd
 
     from etl_jobs_spark.operators import codecs as C
-    from etl_jobs_spark.scratch import scratch_dir
-
-    d = str(scratch_dir("etl_media_gif"))
 
     def batches(it):
         for pdf in it:
@@ -436,14 +425,20 @@ def _stage_media_gif(spark, sf_dir: str) -> str:
             ]
             yield pd.DataFrame(rows, columns=["doc_id", "container", "media"])
 
-    docs = read_table(spark, sf_dir, "documents")
-    # one blob per DISTINCT doc_id — same filename-is-the-key
-    # contract as _stage_media (round-12 duplicate-key axis)
-    docs.select("doc_id").distinct().mapInPandas(
-        batches, schema="doc_id long, container string, media binary"
-    ).repartition(2).write.parquet(d)
-    _GIF_STAGED[sf_dir] = d
-    return d
+    def _build(tmp):
+        docs = read_table(spark, sf_dir, "documents")
+        # one blob per DISTINCT doc_id — same filename-is-the-key
+        # contract as _stage_media (round-12 duplicate-key axis)
+        docs.select("doc_id").distinct().mapInPandas(
+            batches, schema="doc_id long, container string, media binary"
+        ).repartition(2).write.parquet(str(tmp))
+
+    return session_memo(
+        spark,
+        "media_gif",
+        sf_dir,
+        lambda: str(stage_atomic(scratch_dir("etl_media_gif"), _build)),
+    )
 
 
 @register(

@@ -23,9 +23,9 @@ from pathlib import Path
 from pyspark.sql import functions as F
 
 from etl_jobs_spark.operators import quality as Q
-from etl_jobs_spark.queries._shared import _dirty_rules, dirty_events
+from etl_jobs_spark.queries._shared import _dirty_rules, dirty_events, session_memo
 from etl_jobs_spark.registry import register
-from etl_jobs_spark.scratch import scratch_dir
+from etl_jobs_spark.scratch import scratch_dir, stage_atomic
 from etl_jobs_spark.sources import readers, writers
 from etl_jobs_spark.sources.readers import read_table
 
@@ -41,10 +41,6 @@ def _workdir(tag: str) -> Path:
     d = scratch_dir(f"etl_jobs_spark_{tag}")
     shutil.rmtree(d, ignore_errors=True)
     return d
-
-
-#: Immutable staged layouts, memoized per (format, corpus).
-_STAGE_MEMO: dict[str, Path] = {}
 
 
 @register("scan_csv_single", oracle="SELECT * FROM region")
@@ -527,20 +523,25 @@ def scan_xml_roundtrip(spark, sf_dir):
     rule as JSON). The enterprise-integration format the reference
     era never covered; completes the format matrix (csv / json /
     parquet / orc / binary / jdbc / xml)."""
-    key = f"xml:{sf_dir}"
-    if key not in _STAGE_MEMO:
-        d = scratch_dir("etl_xml")
+
+    def _build(tmp):
         read_table(spark, sf_dir, "events").select(
             "event_id", "user_id", "event_type", "value"
         ).coalesce(2).write.format("xml").option("rootTag", "events").option(
             "rowTag", "row"
-        ).save(str(d))
-        _STAGE_MEMO[key] = d
+        ).save(str(tmp))
+
+    d = session_memo(
+        spark,
+        "xml_events",
+        sf_dir,
+        lambda: stage_atomic(scratch_dir("etl_xml"), _build),
+    )
     return (
         spark.read.format("xml")
         .option("rowTag", "row")
         .schema("event_id BIGINT, user_id BIGINT, event_type STRING, value DOUBLE")
-        .load(str(_STAGE_MEMO[key]))
+        .load(str(d))
         .select("event_id", "user_id", "event_type", "value")
     )
 
@@ -645,9 +646,6 @@ def scan_csv_gzip(spark, sf_dir):
     parquet there is no footer/row-group pushdown — every byte
     decompresses; the oracle states plain SQL over the original."""
     import hashlib
-
-    from etl_jobs_spark.queries._shared import session_memo
-    from etl_jobs_spark.scratch import scratch_dir
 
     def stage():
         d = scratch_dir("etl_gzcsv")
@@ -820,7 +818,6 @@ def scan_text_logparse(spark, sf_dir):
     capture group, truncated id) turns the row red. At 100 TB: text
     scan + regex projection is embarrassingly parallel; the single
     small shuffle is the census aggregation."""
-    from etl_jobs_spark.queries._shared import session_memo
 
     def stage():
         d = scratch_dir("logparse")
@@ -906,7 +903,6 @@ def scan_json_nested_explode(spark, sf_dir):
     column; explode is a generate (no shuffle); inference over
     nested JSON would cost a full extra scan — always declare the
     schema."""
-    from etl_jobs_spark.queries._shared import session_memo
 
     def stage():
         d = scratch_dir("nested_json")

@@ -11,7 +11,8 @@ checkpoints belong on the shared store (S3/HDFS) and the trade-off is
 durability, which a drain-and-stop correctness run doesn't need.
 
 A RAM-backed root is memory, so the unpinned dirs a process was handed
-are removed when its interpreter exits; pinned ones (``pinned_scratch``)
+are removed when its interpreter exits, each with the hidden write-lock
+file a table write left next to it; pinned ones (``pinned_scratch``)
 stay for the restart run that reads them.
 """
 
@@ -23,6 +24,8 @@ import shutil
 import tempfile
 import uuid
 from pathlib import Path
+
+from etl_jobs_spark.sources.write_lock import lock_path
 
 _ROOT: Path | None = None
 
@@ -62,6 +65,7 @@ _ALLOCATED: list[Path] = []
 def _remove_allocated() -> None:
     for path in _ALLOCATED:
         shutil.rmtree(path, ignore_errors=True)
+        lock_path(path).unlink(missing_ok=True)
 
 
 def scratch_dir(prefix: str) -> Path:
@@ -80,9 +84,9 @@ def scratch_dir(prefix: str) -> Path:
     return path
 
 
-def stage_atomic(final: Path, build) -> None:
+def stage_atomic(final: Path, build) -> Path:
     """Run ``build(tmp)`` into a sibling temp dir, then atomically
-    rename it to ``final`` — all-or-nothing staging.
+    rename it to ``final`` — all-or-nothing staging. Returns ``final``.
 
     Exists-guarded stagings with MULTIPLE writes (feed + marker
     appends, feed + duplicate-delivery copy) were not atomic with
@@ -103,7 +107,7 @@ def stage_atomic(final: Path, build) -> None:
     discarded — its creator, by existing, proved it never renamed.
     """
     if final.exists():
-        return
+        return final
     tmp = final.with_name(f".{final.name}.__staging")
     if tmp.exists():
         shutil.rmtree(tmp)
@@ -115,6 +119,7 @@ def stage_atomic(final: Path, build) -> None:
             shutil.rmtree(tmp, ignore_errors=True)
         else:
             raise
+    return final
 
 
 def pinned_scratch(root):

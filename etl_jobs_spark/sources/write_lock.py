@@ -9,13 +9,14 @@ stand-in here is a kernel ``flock`` on a lock file NEXT TO the root
 
 The lock lives exactly as long as the holder's file descriptor, so a
 crashed holder's lock dies with its process and nothing has to
-detect or break an abandoned lock. The lock file is never unlinked, so two
-openers can never lock different inodes of one path; the zero-byte
-file stays behind, hidden from Spark by its ``.`` prefix. Holders
+detect or break an abandoned lock. This module never unlinks the lock
+file, so two openers can never lock different inodes of one path; the
+zero-byte file stays behind, hidden from Spark by its ``.`` prefix
+(``scratch`` removes it with the scratch dir it guards). Holders
 acquire and release in one process (the ledger locks in its commit).
 
 Scope: ``flock`` is advisory and holds on a local filesystem. On an
-object store ``_lock_path`` returns None and the lock is a no-op —
+object store ``lock_path`` returns None and the lock is a no-op —
 the seam for a conditional PUT (If-None-Match) or a lock table. A
 writer bypassing this module is the documented-unsafe baseline of
 scripts/axis_concurrent.py.
@@ -36,7 +37,7 @@ class ConcurrentWriteError(RuntimeError):
     """Another writer holds the table's write lock."""
 
 
-def _lock_path(root: str | Path) -> Path | None:
+def lock_path(root: str | Path) -> Path | None:
     """Lockfile path for a table root; None when the root is on a
     store where a posix lockfile is meaningless (s3a:// etc. — the
     conditional-PUT seam documented above)."""
@@ -58,7 +59,7 @@ def acquire_table_lock(root: str | Path, timeout_sec: float = 30.0) -> int | Non
     """Take ``root``'s exclusive write lock and return its fd (None
     for non-posix stores). Waits up to ``timeout_sec``, then raises
     ``ConcurrentWriteError`` — never proceeds without the lock."""
-    lock = _lock_path(root)
+    lock = lock_path(root)
     if lock is None:
         return None
     lock.parent.mkdir(parents=True, exist_ok=True)

@@ -88,14 +88,6 @@ MEMORY_NONRECOVERABLE_ROWS = {
 }
 
 
-def _clear_staging_memos() -> None:
-    """Each query must stage its OWN inputs under its own pinned
-    root so every archive is self-contained (a checkpoint that
-    references another query's staging dir could not be restored
-    independently). Shared helper: cache.clear_staging_memos."""
-    cache.clear_staging_memos()
-
-
 def main() -> None:
     phase = sys.argv[1] if len(sys.argv) > 1 else "archive"
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.001"
@@ -120,7 +112,9 @@ def main() -> None:
         t0 = time.perf_counter()
         ok, err, outcome = True, None, None
         try:
-            _clear_staging_memos()
+            # each query stages its OWN inputs under its own pinned
+            # root, so every archive is self-contained
+            cache.clear_staging_memos()
             if phase == "archive-midway":
                 # Stop after the first COMMITTED batch and leave the
                 # checkpoint MID-DRAIN (no resume): the later

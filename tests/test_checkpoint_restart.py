@@ -9,18 +9,8 @@ from __future__ import annotations
 import pytest
 
 from etl_jobs_spark import scratch
+from etl_jobs_spark.cache import clear_staging_memos
 from tests.conftest import SF_DIR
-
-
-def _clear_memos():
-    from etl_jobs_spark.queries import _shared, analytics_ext, multimodal
-    from etl_jobs_spark.queries import streaming as SQ
-
-    SQ._STAGED.clear()
-    analytics_ext._SDEDUP_MEMO.clear()
-    analytics_ext._JSONL_MEMO.clear()
-    multimodal._MEDIA_STAGED.clear()
-    _shared._SESSION_MEMOS.clear()
 
 
 def test_durable_sink_restart_resumes_without_duplication(spark, tmp_path):
@@ -32,10 +22,10 @@ def test_durable_sink_restart_resumes_without_duplication(spark, tmp_path):
     from etl_jobs_spark.queries.streaming import source_queue
 
     root = tmp_path / "pin"
-    _clear_memos()
+    clear_staging_memos()
     with scratch.pinned_scratch(root):
         first = source_queue(spark, SF_DIR).toPandas()
-    _clear_memos()
+    clear_staging_memos()
     with scratch.pinned_scratch(root):
         again = source_queue(spark, SF_DIR).toPandas()
     assert len(first) > 0
@@ -54,15 +44,15 @@ def test_memory_append_sink_restart_refuses_loudly(spark, tmp_path):
     from etl_jobs_spark.queries.analytics_ext import stream_dedup_exact
 
     root = tmp_path / "pin"
-    _clear_memos()
+    clear_staging_memos()
     with scratch.pinned_scratch(root):
         first = stream_dedup_exact(spark, SF_DIR).toPandas()
     assert len(first) > 0
-    _clear_memos()
+    clear_staging_memos()
     with scratch.pinned_scratch(root):
         with pytest.raises(Exception, match="does not support recovering"):
             stream_dedup_exact(spark, SF_DIR).toPandas()
-    _clear_memos()  # leave no pinned staging for later tests
+    clear_staging_memos()  # leave no pinned staging for later tests
 
 
 def test_pinned_scratch_is_deterministic_and_scoped(tmp_path):

@@ -1,7 +1,8 @@
 """stage_atomic: all-or-nothing staging for exists-guarded fixture
 dirs (ADVICE r14, streaming.py:908 — a crash between a feed write
 and its marker appends left a dir the pinned-scratch restart treated
-as fully staged), and the exit cleanup of unpinned scratch dirs."""
+as fully staged), the staging memo that ``cache.clear_staging_memos``
+forgets, and the exit cleanup of unpinned scratch dirs."""
 
 from __future__ import annotations
 
@@ -9,10 +10,16 @@ import os
 import subprocess
 import sys
 from pathlib import Path
+from urllib.parse import urlparse
 
 import pytest
 
+from etl_jobs_spark.cache import clear_staging_memos
+from etl_jobs_spark.queries import analytics_ext as AQ
+from etl_jobs_spark.queries import multimodal as MMQ
+from etl_jobs_spark.queries import sources_sinks as SSQ
 from etl_jobs_spark.scratch import stage_atomic
+from tests.conftest import SF_DIR
 
 
 def test_builds_then_renames(tmp_path):
@@ -67,12 +74,38 @@ def test_crashed_partial_staging_is_discarded(tmp_path):
     assert (final / "a").read_text() == "full"
 
 
+def _xml_dir(spark):
+    uri = SSQ.scan_xml_roundtrip(spark, SF_DIR).inputFiles()[0]
+    return Path(urlparse(uri).path).parent
+
+
+@pytest.mark.parametrize(
+    "staged",
+    [
+        lambda spark: Path(MMQ._stage_media_gif(spark, SF_DIR)),
+        _xml_dir,
+        lambda spark: AQ._staged_partitioned(spark, SF_DIR)[0],
+    ],
+    ids=["media_gif", "xml", "partitioned"],
+)
+def test_staged_fixture_memoized_until_cleared(spark, staged):
+    first = staged(spark)
+    assert staged(spark) == first
+    clear_staging_memos()
+    fresh = staged(spark)
+    assert fresh != first and fresh.is_dir()
+    assert not any(p.with_name(f".{p.name}.__staging").exists() for p in (first, fresh))
+
+
 _ALLOCATE_AND_EXIT = """
 import sys
 from etl_jobs_spark import scratch
+from etl_jobs_spark.sources.write_lock import table_write_lock
 d = scratch.scratch_dir("exit_probe")
 (d / "sub").mkdir(parents=True)
 (d / "sub" / "f").write_text("x")
+with table_write_lock(d):
+    pass
 with scratch.pinned_scratch(sys.argv[1]):
     p = scratch.scratch_dir("pinned_probe")
 p.mkdir(parents=True)

@@ -13,8 +13,8 @@ import pytest
 
 from etl_jobs_spark.sources.write_lock import (
     ConcurrentWriteError,
-    _lock_path,
     acquire_table_lock,
+    lock_path,
     release_table_lock,
     table_write_lock,
 )
@@ -23,7 +23,7 @@ from etl_jobs_spark.sources.write_lock import (
 def test_exclusive_and_released(tmp_path):
     root = tmp_path / "tbl"
     with table_write_lock(root):
-        assert _lock_path(root).exists()
+        assert lock_path(root).exists()
         with pytest.raises(ConcurrentWriteError):
             acquire_table_lock(root, timeout_sec=0.2)
     # released on exit: taken again at once, with no wait
@@ -51,13 +51,13 @@ def test_waiter_proceeds_after_holder_releases(tmp_path):
 def test_lock_is_sibling_not_child(tmp_path):
     # overwrite mode deletes the root's contents — the lock must
     # survive that, so it lives NEXT TO the root
-    p = _lock_path(tmp_path / "tbl")
+    p = lock_path(tmp_path / "tbl")
     assert p.parent == tmp_path and p.name == ".tbl.__write_lock"
 
 
 def test_uri_and_object_store_paths(tmp_path):
-    assert _lock_path((tmp_path / "t").as_uri()) == _lock_path(tmp_path / "t")
-    assert _lock_path("s3a://bucket/table") is None
+    assert lock_path((tmp_path / "t").as_uri()) == lock_path(tmp_path / "t")
+    assert lock_path("s3a://bucket/table") is None
     # non-posix store: lock degrades to a documented no-op
     with table_write_lock("s3a://bucket/table"):
         pass
