@@ -198,9 +198,8 @@ _STREAMING = ("stream", "sink", "source")
 #: staging). ``prestage_shared`` stages the groups whose prefixes
 #: start one of the query names it is given: the bench does so before
 #: each pass (``cache.clear_staging_memos`` forgets every fixture in
-#: between, so a fixture missing here is timed in both passes),
-#: scripts/opt_plans.py and scripts/scale_ladder.py before their
-#: runs. A group labelled None is staged without a timing line.
+#: between, so a fixture missing here is timed in both passes) and
+#: scripts/scale_ladder.py before its runs. A group labelled None is staged without a timing line.
 SHARED_FIXTURES = [
     # streaming fixture inputs: stream_* rows time the operators
     (None, _STREAMING, _stage_streaming),

@@ -689,8 +689,7 @@ def join_dpp_pruned(spark, sf_dir):
     side's ``keep = 1`` filter runs, and Catalyst turns the join key
     into a DynamicPruningExpression on the partitioned scan, so the
     fact table still lists/reads only the 2 matching directories of
-    5 (tests/test_plan_quality.py asserts the pruning subquery is in
-    the plan). Static pruning (scan_partition_pruned) handles
+    5 (its plan census entry counts the DynamicPruning filter). Static pruning (scan_partition_pruned) handles
     literal predicates; THIS is the mechanism that keeps star joins
     partition-pruned at 100 TB when the filter lives on the
     dimension — without it the fact scan reads everything and the
@@ -774,7 +773,7 @@ def agg_count_min_sketch(spark, sf_dir):
     key — one-sided error (never undercounts, asserted per row in
     the output). The 100 TB heavy-hitter / frequency-cap primitive:
     state is KBs where an exact count-by-key would shuffle the
-    corpus."""
+    corpus. The probes read the sketch through broadcast joins."""
     probes_df = spark.createDataFrame(
         [(p,) for p in _CMS_PROBES], "user_id BIGINT"
     )
@@ -870,7 +869,7 @@ def agg_gini_revenue(spark, sf_dir):
     same Σ i·x under any permutation), so the custkey tiebreak is
     cosmetic. Scale shape: one join + two keyed aggregations + one
     window, all partitioned by segment — no driver math, no sort
-    beyond the per-segment window."""
+    beyond the per-segment window. The segment dim broadcasts."""
     from pyspark.sql import Window as W
 
     orders = read_table(spark, sf_dir, "orders")

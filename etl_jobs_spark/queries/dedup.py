@@ -110,7 +110,8 @@ def _minhash_oracle() -> str:
 @register("dedup_minhash_lsh", oracle=_minhash_oracle())
 def dedup_minhash_lsh(spark, sf_dir):
     """MinHash + LSH banding near-dup candidates with estimated
-    similarity (shingle → minhash → band → bucket-join)."""
+    similarity (shingle → minhash → band → bucket-join). Candidates
+    come from a band-hash equi-join: no cross join anywhere."""
     return _minhash_pairs(spark, sf_dir)
 
 
@@ -340,7 +341,8 @@ def dedup_embed_cosine(spark, sf_dir):
 
     # persisted: the canonical corpus feeds several plan branches
     # (cell map, both pair sides, id spine) and without the persist
-    # each branch re-runs the canon groupBy (PLANS.md exchange audit)
+    # each branch re-runs the canon groupBy (the InMemoryTableScan
+    # count of its docs/PLAN_CENSUS.json entry)
     emb = cache.track(
         read_table(spark, sf_dir, "embeddings")
         .groupBy("vec_id", "embedding")
@@ -514,7 +516,8 @@ def dedup_semantic_keep_best(spark, sf_dir):
 
     # persisted: the canonical corpus feeds several plan branches
     # (cell map, both pair sides, id spine) and without the persist
-    # each branch re-runs the canon groupBy (PLANS.md exchange audit)
+    # each branch re-runs the canon groupBy (the InMemoryTableScan
+    # count of its docs/PLAN_CENSUS.json entry)
     emb = cache.track(
         read_table(spark, sf_dir, "embeddings")
         .groupBy("vec_id", "embedding")
@@ -530,8 +533,8 @@ def dedup_semantic_keep_best(spark, sf_dir):
     # twice, so the whole blocked-cosine pair build (cell map +
     # unrolled 64-dim dot over every in-cell pair) ran once per
     # branch — the plan held 42 Exchange nodes with zero
-    # ReusedExchange (plans/r15/dedup_semantic_keep_best_before
-    # .txt). One explode of a 2-element struct array emits exactly
+    # ReusedExchange (its docs/PLAN_CENSUS.json entry now counts 7).
+    # One explode of a 2-element struct array emits exactly
     # the same directed rows from ONE pass; at 100 TB this halves
     # the pair-generation work outright (guide §2.4).
     neigh = pairs.select(
@@ -1014,8 +1017,9 @@ def dedup_substring_spans(spark, sf_dir):
     only quadratic risk), gram equi-join, and diagonal run-chaining
     via the islands idiom. The planted truncated copies surface as
     full-prefix spans; positions and lengths are exact integers.
-    Completes the exact -> fuzzy -> semantic -> substring ladder
-    (VERDICT r6 item 4)."""
+    The stop-gram cap is one window, the gram join ONE equi-join and
+    the diagonal chaining one window family. Completes the exact ->
+    fuzzy -> semantic -> substring ladder (VERDICT r6 item 4)."""
     return _span_table(spark, sf_dir)
 
 

@@ -876,7 +876,9 @@ def graph_link_prediction_cn(spark, sf_dir):
     at 100 TB instead degree-orients the wedge enumeration and
     thresholds cn (stated — this query is the probe shape). Edge
     table and degree map come from the shared session memos
-    (first-consumer-pays policy)."""
+    (first-consumer-pays policy). The seeds broadcast into the
+    two-hop equi-join and the degree map broadcasts onto both
+    endpoints."""
     edges = _copurchase_edges(spark, sf_dir)
     deg = _copurchase_degrees(spark, sf_dir)
     bidir = cache.track(
@@ -920,8 +922,8 @@ def graph_link_prediction_cn(spark, sf_dir):
         )
         # bounded global window (r16 audit): rank + `rnk <= K`
         # plans as WindowGroupLimit (partial top-K ahead of the
-        # single-partition stage —
-        # plans/r16/graph_link_prediction_cn_after.txt)
+        # single-partition stage; not benched, so no plan census
+        # entry checks it)
         .withColumn("rnk", F.row_number().over(w).cast("bigint"))
         .filter(F.col("rnk") <= LP_TOPK)
         .select("u", "v", "cn", "du", "dv", "jaccard_permille", "rnk")
@@ -1000,8 +1002,8 @@ def graph_local_clustering_topk(spark, sf_dir):
     from pyspark.sql import Window as W
 
     # bounded global window (r16 audit): rank + `rnk <= K` compiles
-    # to TakeOrderedAndProject over the per-node degree table
-    # (plans/r16/graph_local_clustering_topk_after.txt)
+    # to TakeOrderedAndProject over the per-node degree table (not
+    # benched, so no plan census entry checks it)
     top = (
         deg.withColumn(
             "rnk",

@@ -1131,8 +1131,9 @@ def agg_time_decay_topk(spark, sf_dir):
     w = W.orderBy(F.col("decay_score_cents").desc(), F.col("user_id").asc())
     # bounded global window (r16 audit): rank + `rnk <= K` compiles
     # to TakeOrderedAndProject (per-partition top-K, driver merge of
-    # K x partitions rows — plans/r16/agg_time_decay_topk_after.txt);
-    # no single-partition pass over the per-user table ever runs
+    # K x partitions rows; not benched, so no plan census entry
+    # checks it); no single-partition pass over the per-user table
+    # ever runs
     return (
         scores.withColumn("rnk", F.row_number().over(w).cast("bigint"))
         .filter(F.col("rnk") <= _DECAY_TOPK)

@@ -321,6 +321,8 @@ def window_range_frame(spark, sf_dir):
     """,
 )
 def q1_pricing_summary(spark, sf_dir):
+    """TPC-H Q1 shape: the shipdate filter is pushed down to a
+    column-pruned scan and the aggregate runs partial then final."""
     return R.pricing_summary(read_table(spark, sf_dir, "lineitem"))
 
 
@@ -340,6 +342,8 @@ def q1_pricing_summary(spark, sf_dir):
     """,
 )
 def join_star_revenue(spark, sf_dir):
+    """Star join: the small dims broadcast, so the fact side never
+    shuffles for a join."""
     return R.star_join_revenue(
         read_table(spark, sf_dir, "lineitem"),
         read_table(spark, sf_dir, "orders"),
@@ -359,6 +363,8 @@ def join_star_revenue(spark, sf_dir):
     """,
 )
 def topk_orders(spark, sf_dir):
+    """Global top-k that compiles to TakeOrderedAndProject: no full
+    sort."""
     return R.top_orders(read_table(spark, sf_dir, "orders"), k=10)
 
 

@@ -2161,7 +2161,7 @@ def embed_dim_variance_topk(spark, sf_dir):
 
     # bounded global window (r16 audit): input is one row per
     # embedding dimension (<= 64) AND the rank-limit compiles to
-    # TakeOrderedAndProject (plans/r16/embed_dim_variance_topk_after.txt)
+    # TakeOrderedAndProject (its docs/PLAN_CENSUS.json entry)
     return (
         v.withColumn(
             "rnk",

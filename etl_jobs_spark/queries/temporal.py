@@ -578,7 +578,8 @@ def join_asof_tolerance(spark, sf_dir):
     join), tolerance applied as an integer-microsecond projection,
     unmatched left rows restored by an anti-join union (both extra
     steps map-only or broadcast-sized; the window shuffle is still
-    the only fact shuffle)."""
+    the only fact shuffle). Purchase ids canonicalize in one keyed
+    window (the duplicate-id axis)."""
     ev = read_table(spark, sf_dir, "events")
     clicks = (
         ev.filter(F.col("event_type") == "click")

@@ -1299,8 +1299,8 @@ def text_collocation_lift(spark, sf_dir):
         )
     )
     # bounded global window (r16 audit): rank + `rnk <= K` compiles
-    # to TakeOrderedAndProject (plans/r16/text_collocation_lift_after
-    # .txt) — never a single-partition pass over the bigram table
+    # to TakeOrderedAndProject (its docs/PLAN_CENSUS.json entry) —
+    # never a single-partition pass over the bigram table
     ranked = scored.withColumn(
         "rnk",
         F.row_number()

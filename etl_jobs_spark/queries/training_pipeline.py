@@ -121,7 +121,9 @@ def _quality_gate_oracle() -> str:
 def quality_filter_top_half(spark, sf_dir):
     """Quality gate: keep each language's better half by the
     composite quality heuristic — rank-based (ntile), so the cut is
-    exact integer logic with no float-boundary ambiguity."""
+    exact integer logic with no float-boundary ambiguity. The score
+    rides through the projection (no rejoin by id) into ONE keyed
+    ntile window."""
     return TR.quality_top_half(read_table(spark, sf_dir, "documents"))
 
 
@@ -715,7 +717,8 @@ def pipeline_rag_retrieval_end_to_end(spark, sf_dir):
     end-to-end exactly like pipeline_llm_corpus_end_to_end's
     stage-composed oracle. Scale shape: the gate is one keyed
     ntile window over doc quality; retrieval adds the MMR plan
-    (broadcast-query scan + q·C² sims + bounded driver greedy)."""
+    (broadcast-query scan + q·C² sims + bounded driver greedy). The
+    quality keep-set is a LEFT SEMI join on the candidate side only."""
     from etl_jobs_spark.queries.similarity import _mmr_select
 
     keep = quality_filter_top_half(spark, sf_dir).select("doc_id")

@@ -407,25 +407,26 @@ def catalog_partition_overwrite(spark, sf_dir):
     correction over the raw table."""
     import hashlib
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    name = f"events_pt_{tag}"
+    from etl_jobs_spark.queries._shared import session_memo
+    from etl_jobs_spark.scratch import scratch_dir
+
+    name = f"events_pt_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
+
+    def create():
+        # explicit location: keep table files on scratch, not a
+        # spark-warehouse/ dir in whatever CWD the caller has
+        path = scratch_dir(f"wh_{name}")
+        read_table(spark, sf_dir, "events").select(
+            "event_id", "value", "event_type"
+        ).write.partitionBy("event_type").mode("overwrite").option(
+            "path", str(path)
+        ).saveAsTable(name)
+        return path
+
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        if not spark.catalog.tableExists(name):
-            from etl_jobs_spark.scratch import scratch_root
-
-            ev = read_table(spark, sf_dir, "events").select(
-                "event_id", "value", "event_type"
-            )
-            (
-                ev.write.partitionBy("event_type")
-                .mode("overwrite")
-                # explicit location: keep table files on scratch, not
-                # a spark-warehouse/ dir in whatever CWD the caller has
-                .option("path", str(scratch_root() / f"wh_{name}"))
-                .saveAsTable(name)
-            )
+        session_memo(spark, "catalog_events_pt", sf_dir, create)
         # the backfill: rebuild ONE partition with corrected values
         read_table(spark, sf_dir, "events").filter(
             F.col("event_type") == "click"

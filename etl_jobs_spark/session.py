@@ -60,9 +60,9 @@ ENGINE_CONF: dict[str, str] = {
     # on the 15-query join-heavy A/B subset at sf0.1: 23.2s -> 19.1s
     # min-of-2 (-18%), no per-query regression (OPTIMIZATION_r15.md).
     # Plan evidence (VERDICT r15 item 6): cdc_apply_changelog's
-    # full-outer apply flips SortMergeJoin(2) -> ShuffledHashJoin(2)
-    # under this conf — plans/r16/cdc_apply_changelog_{smj,shj}_pref
-    # .txt, oracle row unchanged. Known exposure (ADVICE r15): SHJ's
+    # full-outer apply flips SortMergeJoin -> ShuffledHashJoin under
+    # this conf (its docs/PLAN_CENSUS.json entry), oracle row
+    # unchanged. Known exposure (ADVICE r15): SHJ's
     # per-partition build map cannot spill, so with the 64 MB
     # broadcast threshold a SKEWED build partition at cluster scale
     # can OOM an executor where sort-merge would have spilled; AQE

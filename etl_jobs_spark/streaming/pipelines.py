@@ -372,10 +372,11 @@ def run_to_memory(
         # batch_id) — and the table is reconstructed exactly as the
         # memory sink defines it: append/update accumulate every
         # batch's emitted rows; complete replaces, so only the last
-        # batch survives.
+        # batch survives. The batch dirs live inside the checkpoint
+        # dir, so they go wherever the checkpoint goes.
         import os
 
-        out_root = checkpoint_dir.rstrip("/") + "_faultsink"
+        out_root = os.path.join(checkpoint_dir, "faultsink")
         schema = stream_df.schema
 
         def per_batch(batch_df: DataFrame, batch_id: int) -> None:

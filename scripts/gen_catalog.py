@@ -2,6 +2,9 @@
 
 Run after adding/removing registered queries:
     python scripts/gen_catalog.py
+
+The hand-written sections after the table (from its first ``## ``
+heading on, e.g. the retired-levers decision log) are kept.
 """
 
 from __future__ import annotations
@@ -39,7 +42,9 @@ def main() -> None:
             f"{doc.replace('|', chr(92) + '|')} |"
         )
     out = Path(__file__).resolve().parents[1] / "docs" / "OPERATORS.md"
-    out.write_text("\n".join(lines) + "\n")
+    old = out.read_text() if out.exists() else ""
+    kept = old[old.find("\n## ") :] if "\n## " in old else ""
+    out.write_text("\n".join(lines) + "\n" + kept)
     print(f"wrote {out} ({len(regs)} queries)")
 
 

@@ -37,6 +37,7 @@ import json
 import os
 import shutil
 import sys
+import time
 from functools import reduce
 from pathlib import Path
 
@@ -47,10 +48,9 @@ from pyspark.sql import DataFrame  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from bench import prestage_shared  # noqa: E402
-from etl_jobs_spark import registry  # noqa: E402
+from etl_jobs_spark import cache, registry  # noqa: E402
 from etl_jobs_spark.session import get_spark  # noqa: E402
 from etl_jobs_spark.sources.readers import FIXTURE_TABLES, read_table  # noqa: E402
-from scripts.opt_plans import noop_runs  # noqa: E402
 
 #: id columns to offset per replica copy, per table.
 OFFSETS = {
@@ -99,6 +99,21 @@ def build(spark, src: str, out: str, copies: int, skew: str | None = None) -> No
         )
 
 
+def noop_runs(spark, build, sf_dir: str, n: int = 2) -> list[float]:
+    """Build ``build(spark, sf_dir)`` afresh and write it to the noop
+    sink (computes every column, discards the output) ``n`` times.
+    Persists are released before each run and after the last. Returns
+    the seconds of each run."""
+    secs = []
+    for _ in range(n):
+        cache.release_all()
+        t0 = time.perf_counter()
+        build(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        secs.append(round(time.perf_counter() - t0, 3))
+    cache.release_all()
+    return secs
+
+
 def run(dirs: list[str], names: list[str]) -> None:
     spark = get_spark("scale-ladder")
     queries = registry.all_queries()
@@ -111,7 +126,7 @@ def run(dirs: list[str], names: list[str]) -> None:
         prestage_shared(spark, d, names)
         results[d] = {}
         for name in names:
-            secs, _ = noop_runs(spark, queries[name], d)
+            secs = noop_runs(spark, queries[name], d)
             results[d][name] = min(secs)
             print(f"# {d} {name}: {secs}", file=sys.stderr)
     print(json.dumps({"master": spark.sparkContext.master, "noop_min2": results}))

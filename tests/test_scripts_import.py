@@ -1,6 +1,6 @@
 """Every ``scripts/*.py`` imports as a module without starting Spark:
 each guards its ``main()``. An import of a helper that moved or was
-deleted (``from bench import …``, ``from scripts.opt_plans import …``)
+deleted (``from bench import …``, ``from scripts.plan_census import …``)
 fails here instead of at the next measurement run. The scripts also run
 from any working directory, Python DataSource workers included."""
 

@@ -97,6 +97,31 @@ def test_staged_fixture_memoized_until_cleared(spark, staged):
     assert not any(p.with_name(f".{p.name}.__staging").exists() for p in (first, fresh))
 
 
+def test_catalog_table_lives_in_a_scratch_allocation(spark, oracle):
+    """catalog_partition_overwrite's table sits in a ``scratch_dir``
+    allocation, so it is removed at exit and two processes never share
+    it. It is created once per staging memo: a cleared memo recreates
+    it at a fresh location, with the same result."""
+    from etl_jobs_spark import scratch
+    from etl_jobs_spark.queries.warehouse_ext import catalog_partition_overwrite
+    from etl_jobs_spark.registry import all_oracles
+    from tests.conftest import assert_matches_oracle
+
+    def run():
+        df = catalog_partition_overwrite(spark, SF_DIR)
+        assert_matches_oracle(df, oracle, all_oracles()["catalog_partition_overwrite"])
+        # <table>/event_type=<v>/part-*.parquet
+        (root,) = {Path(urlparse(u).path).parents[1] for u in df.inputFiles()}
+        return root
+
+    first = run()
+    assert first in scratch._ALLOCATED
+    assert run() == first
+    clear_staging_memos()
+    fresh = run()
+    assert fresh != first and fresh in scratch._ALLOCATED
+
+
 _ALLOCATE_AND_EXIT = """
 import sys
 from etl_jobs_spark import scratch

@@ -100,3 +100,20 @@ def test_fault_mode_does_not_leak(spark):
     with P.fault_injection():
         assert P._FAULT is not None
     assert P._FAULT is None
+
+
+def test_fault_sink_stays_inside_its_checkpoint(spark, tmp_path):
+    """Under injection the memory-sink emulation writes its per-batch
+    dirs inside the checkpoint dir, so they go when the checkpoint
+    goes: nothing is left next to it."""
+    feed, ck = tmp_path / "feed", tmp_path / "ck"
+    spark.range(10).repartition(2).write.parquet(str(feed))
+    stream = (
+        spark.readStream.schema("id BIGINT")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(feed))
+    )
+    with P.fault_injection(stop_after_batches=1):
+        got = P.run_to_memory(stream, str(ck))
+        assert sorted(r.id for r in got.collect()) == list(range(10))
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["ck", "feed"]
